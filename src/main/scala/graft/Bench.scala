@@ -147,6 +147,16 @@ object Bench {
       s""""queries_median":$med,"contended":false,""" +
       s""""live_run":"contended (load $liveLoad), demoted to $demotedTo"}"""
 
+  /** Split per-query samples (None = the sample threw) into the timed
+    * queries and the names of the failed ones: a query with any throwing
+    * sample is reported as failed and never timed, so a throw can never
+    * read as a fast query. */
+  private[graft] def classify(samples: Seq[(String, Seq[Option[Double]])])
+      : (Seq[(String, Seq[Double])], Seq[String]) = {
+    val (ok, bad) = samples.partition(_._2.forall(_.isDefined))
+    (ok.map { case (n, ts) => n -> ts.flatten }, bad.map(_._1))
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
@@ -179,28 +189,33 @@ object Bench {
     // warm = best-of-2 after it (steady-state throughput, GC/scheduler noise
     // minimized). Both are reported so rounds are comparable either way;
     // headline "value" is the warm total.
-    def timed(fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+    def timed(name: String): Option[Double] = {
       val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-      (System.nanoTime() - t0) / 1e9
+      try {
+        SparkEntry.queries(name)(spark, sfDir).count()
+        Some((System.nanoTime() - t0) / 1e9)
+      } catch {
+        case e: Throwable =>
+          System.err.println(s"[bench] $name failed: $e")
+          None
+      }
     }
     // Sorted order: map-hash iteration reshuffles when queries are added,
     // which made round-over-round artifacts hard to diff (and moved the
     // first-query JIT cost to a random victim).
-    val base = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      (name, fn, timed(fn), timed(fn), timed(fn))
-    }
+    val (base, baseFailed) = classify(SparkEntry.queries.keys.toSeq.sorted
+      .map(name => name -> Seq.fill(3)(timed(name))))
     // Cross-session totals vary ±8% and single warm samples flip sign
     // between runs — so the HEAVY tail (where per-query deltas matter)
     // gets a THIRD warm sample and reports the median of three: one
     // outlier sample can no longer fake a regression or an improvement
     // on exactly the queries rounds are compared by.
     val MedianQueries = 15
-    val heavy = base.sortBy(t => -math.min(t._4, t._5)).take(MedianQueries)
-    val medians: Seq[(String, Double)] = heavy.map { case (name, fn, _, w1, w2) =>
-      name -> Seq(w1, w2, timed(fn)).sorted.apply(1)
-    }
-    val results = base.map { case (name, _, c, w1, w2) => name -> ((c, math.min(w1, w2))) }
+    val heavy = base.sortBy { case (_, ts) => -math.min(ts(1), ts(2)) }.take(MedianQueries)
+    val (medianSamples, medianFailed) = classify(heavy.map { case (name, ts) =>
+      name -> (ts.drop(1).map(Some(_)) :+ timed(name))
+    })
+    val medians = medianSamples.map { case (name, ts) => name -> ts.sorted.apply(1) }
     // CONTROL BLOCK (r13, VERDICT r12 #8): a fixed set of queries whose
     // CODE no round touches, re-measured best-of-3 at the END of the run
     // (fully warm) and stamped into the artifact — so round-over-round
@@ -214,9 +229,14 @@ object Bench {
     // one round's median to 5 shared controls instead of corrupting it.
     val ControlQueries = Seq("mr_wordcount", "mr_sort", "q_local_supplier",
       "q_join_salted", "q_waiting_suppliers", "q_market_share")
-    val controls = ControlQueries.flatMap(n => SparkEntry.queries.get(n).map { fn =>
-      n -> Seq(timed(fn), timed(fn), timed(fn)).min
-    })
+    val (controlSamples, controlFailed) = classify(ControlQueries
+      .filter(SparkEntry.queries.contains).map(n => n -> Seq.fill(3)(timed(n))))
+    val controls = controlSamples.map { case (n, ts) => n -> ts.min }
+    // a failed query leaves every total, whichever pass it threw in
+    val failed = (baseFailed ++ medianFailed ++ controlFailed).distinct.sorted
+    val failedArr = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val results = base.filterNot { case (name, _) => failed.contains(name) }
+      .map { case (name, ts) => name -> ((ts(0), math.min(ts(1), ts(2)))) }
     def r3(d: Double): Double = math.round(d * 1000) / 1000.0
     val ctlObj = controls
       .map { case (k, v) => s"\"" + k + "\":" + r3(v) }.mkString("{", ",", "}")
@@ -253,7 +273,7 @@ object Bench {
     // artifact goes out first on stdout AND to a file, and the LAST line is
     // a compact, complete JSON — headline totals plus the heavy-tail
     // medians — guaranteed to fit the archived tail and parse.
-    val full = s"""{"metric":"total","unit":"sec","sf":"$sfDir","cpus":$cpus,"load_avg_start":${r3(loadAvg)},"cold_total":${r3(coldTotal)},"queries_cold":${obj(_._1)},"queries":${obj(_._2)},"queries_median":$medObj,"median_heavy_total":${r3(medTotal)},"controls":$ctlObj,"controls_protocol":"best-of-3, end of run",$ctlNormFields"value":${r3(warmTotal)}}"""
+    val full = s"""{"metric":"total","unit":"sec","sf":"$sfDir","cpus":$cpus,"load_avg_start":${r3(loadAvg)},"cold_total":${r3(coldTotal)},"queries_cold":${obj(_._1)},"queries":${obj(_._2)},"queries_median":$medObj,"median_heavy_total":${r3(medTotal)},"controls":$ctlObj,"controls_protocol":"best-of-3, end of run","failed":$failedArr,$ctlNormFields"value":${r3(warmTotal)}}"""
     println(full)
     // Self-defense: a contended run (load > 2.0 at start) must not clobber a
     // clean artifact — rounds 6 and 8 both lost their idle-box numbers to a
@@ -279,16 +299,17 @@ object Bench {
     // demoted, echo the kept clean artifact's numbers (same query set
     // required) so the round artifact and the clean file can't disagree;
     // otherwise the live numbers, with contended affirmatively stamped.
-    val liveLine = s"""{"metric":"total","unit":"sec","sf":"$sfDir","cpus":$cpus,"value":${r3(warmTotal)},"cold_total":${r3(coldTotal)},"median_heavy_total":${r3(medTotal)},"load_avg_start":${r3(loadAvg)},"n_queries":${results.size},"full_artifact":"$fullPath","controls":$ctlObj,"queries_median":$medObj,$ctlNormFields"contended":${loadAvg > ContendedLoad}}"""
+    val liveLine = s"""{"metric":"total","unit":"sec","sf":"$sfDir","cpus":$cpus,"value":${r3(warmTotal)},"cold_total":${r3(coldTotal)},"median_heavy_total":${r3(medTotal)},"load_avg_start":${r3(loadAvg)},"n_queries":${results.size},"full_artifact":"$fullPath","controls":$ctlObj,"queries_median":$medObj,"failed":$failedArr,$ctlNormFields"contended":${loadAvg > ContendedLoad}}"""
     // A cpus-demoted run reports its OWN numbers (the driver's low-core
-    // scaling pass reads them from stdout); only a contention demote
-    // re-emits the kept clean artifact.
+    // scaling pass reads them from stdout), and so does a run with failed
+    // queries; only a clean contention demote re-emits the kept artifact.
     val lastLine =
-      if (fullPath == basePath || cpusSlot.isDefined) liveLine
+      if (fullPath == basePath || cpusSlot.isDefined || failed.nonEmpty) liveLine
       else priorTxt
         .flatMap(keptCompactLine(_, sfDir, results.map(_._1).toSet, fullPath, r3(loadAvg)))
         .getOrElse(liveLine)
     println(lastLine)
     spark.stop()
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

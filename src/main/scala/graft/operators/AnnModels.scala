@@ -38,6 +38,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * probes go through the Hadoop FileSystem for the path's scheme — an
   * object-store root works the same as a local one.
   *
+  * Bookkeeping: every generation write counts one build under the
+  * artifact's kind ([[builds]], the one counter specs read), and every key
+  * is built from the named constants the computation reads, with shared
+  * fragments included by reference. Only this layout is read: a marker
+  * without a generation line reads as absent, so the next access retrains.
+  *
   * Concurrency: training and generation GC are serialized per JVM
   * (`synchronized`); the store assumes a SINGLE WRITER process (the
   * deployment shape — one nightly driver owns the registry). Concurrent
@@ -48,81 +54,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object AnnModels {
 
-  /** Training-run counters (spec-asserted: an existing artifact means
-    * ZERO additional training passes across all consumers). */
-  @volatile private[graft] var ivfTrains = 0
-  @volatile private[graft] var pqTrains = 0
-  @volatile private[graft] var lmTrains = 0
-  @volatile private[graft] var lm5Trains = 0
-  @volatile private[graft] var ppl5ScoreTrains = 0
-  @volatile private[graft] var langidTrains = 0
-  @volatile private[graft] var bpeTrains = 0
-  @volatile private[graft] var bpeBigTrains = 0
-  @volatile private[graft] var qualityTrains = 0
-  @volatile private[graft] var ingestGateTrains = 0
-  @volatile private[graft] var lshIndexBuilds = 0
-  @volatile private[graft] var phashIndexBuilds = 0
-  @volatile private[graft] var phashLabelBuilds = 0
-  @volatile private[graft] var audioLabelBuilds = 0
-  @volatile private[graft] var qualityLogitTrains = 0
-  @volatile private[graft] var trainedMarginTrains = 0
-  @volatile private[graft] var shinglePairBuilds = 0
-  @volatile private[graft] var pplScoreTrains = 0
+  /** Build attempts per artifact kind — one per generation write, so a
+    * retry after a mid-train corpus edit counts twice (spec-asserted: an
+    * existing artifact means ZERO additional builds across all consumers). */
+  private val buildCounts = new java.util.concurrent.ConcurrentHashMap[String, Int]
 
-  @volatile private[graft] var lrGateTrains = 0
-  @volatile private[graft] var verifiedPairBuilds = 0
-  @volatile private[graft] var survivorBuilds = 0
-  @volatile private[graft] var tokenTotalTrains = 0
-  @volatile private[graft] var dsirTrains = 0
-  @volatile private[graft] var alignScoreTrains = 0
-  @volatile private[graft] var ivfAssignTrains = 0
-  @volatile private[graft] var pqCodeTrains = 0
-  @volatile private[graft] var hammingDegenTrains = 0
-  @volatile private[graft] var hammingPairTrains = 0
-  @volatile private[graft] var lrMarginTrains = 0
-  @volatile private[graft] var ftMarginTrains = 0
-  @volatile private[graft] var uniTrains = 0
-  @volatile private[graft] var semanticLabelTrains = 0
-  @volatile private[graft] var funnelFlagBuilds = 0
-  @volatile private[graft] var knnGraphBuilds = 0
-  @volatile private[graft] var uniBigTrains = 0
-  @volatile private[graft] var langidScoreBuilds = 0
-  @volatile private[graft] var qualityScoreBuilds = 0
-  @volatile private[graft] var candPairBuilds = 0
-  @volatile private[graft] var candLabelBuilds = 0
-  @volatile private[graft] var gopherFlagBuilds = 0
-  @volatile private[graft] var dirtyGramBuilds = 0
-  @volatile private[graft] var calibKeepBuilds = 0
-  @volatile private[graft] var candSigBuilds = 0
-  @volatile private[graft] var candGramCountBuilds = 0
-  @volatile private[graft] var calibManifestBuilds = 0
-  @volatile private[graft] var buildManifestBuilds = 0
-  @volatile private[graft] var trainedManifestBuilds = 0
-  @volatile private[graft] var lrManifestBuilds = 0
-  @volatile private[graft] var bpeDocTokenBuilds = 0
-  @volatile private[graft] var trainedDocTokenBuilds = 0
-  @volatile private[graft] var trainedBigDocTokenBuilds = 0
-  @volatile private[graft] var bpeIdStreamBuilds = 0
-  @volatile private[graft] var bpeIdStreamBigBuilds = 0
-  @volatile private[graft] var dsirScoredBuilds = 0
-  @volatile private[graft] var substrStatBuilds = 0
-  @volatile private[graft] var dupStartBuilds = 0
-  @volatile private[graft] var boilerTopBuilds = 0
-  @volatile private[graft] var embedPairBuilds = 0
-  @volatile private[graft] var bandedPairBuilds = 0
-  @volatile private[graft] var resampleBuilds = 0
-  @volatile private[graft] var srcStatBuilds = 0
-  @volatile private[graft] var curateBuilds = 0
-  @volatile private[graft] var curateModelBuilds = 0
-  @volatile private[graft] var curateNearDupBuilds = 0
-  @volatile private[graft] var curateSemanticBuilds = 0
-  @volatile private[graft] var curateAlignedBuilds = 0
-  @volatile private[graft] var curateSourceBuilds = 0
-  @volatile private[graft] var bpeStaticVocabBuilds = 0
-  @volatile private[graft] var bpeStaticIdStreamBuilds = 0
-  @volatile private[graft] var bpeDecodeAuditBuilds = 0
-  @volatile private[graft] var interleaveOrderBuilds = 0
-  @volatile private[graft] var curriculumOrderBuilds = 0
+  private[graft] def builds(kind: String): Int = buildCounts.getOrDefault(kind, 0)
 
   /** The trigram LM's training constants, inlined into every key that
     * depends on the LM's output (the registry's key discipline: change a
@@ -130,6 +67,51 @@ object AnnModels {
     * persistent store serve stale-coefficient scores silently). */
   private val LmParams = "n=3,i=500/375/125"
   private val Lm5Params = "n=5,kn,d=1/2"
+
+  /** Key fragments several artifacts share. Each is the params of the
+    * artifact that owns the constants, so a downstream key includes its
+    * upstream's fragment by reference and a constant edit re-keys the
+    * whole chain. Defs, not vals: they read other objects' constants. */
+  private def qlogParams: String =
+    s"$LmParams,coef=${TextOps.QmBias}/${TextOps.QmStop}/${TextOps.QmRepUni}/" +
+      s"${TextOps.QmRep3}/${TextOps.QmPunct}/${TextOps.QmNll}/" +
+      s"${TextOps.QmLenPerTok}x${TextOps.QmLenCap}"
+  private def calibParams: String = s"$qlogParams,rule=ceilhalf"
+  private def qtmParams: String =
+    s"fit=rocchio,feat=${TextOps.QualityFeatNames.size},half=even," +
+      s"cap=${TextOps.QmLenCap},seed=${TextOps.QualitySeedMinFlags},$LmParams"
+  private def lrFitParams: String =
+    s"fit=lr,k=${TextOps.QualityLrIters}," +
+      s"eta=${TextOps.QualityLrEtaNum}/${TextOps.QualityLrEtaDen},ctr=mean-clamp1e4," +
+      s"feat=${TextOps.QualityFeatNames.size},half=even,seed=${TextOps.QualitySeedMinFlags}"
+  private def qlrParams: String = s"$lrFitParams,$LmParams"
+  private def markersKey: String =
+    s"mk=${constHash(TextOps.Markers.map { case (l, ws) => l + ":" + ws.mkString(",") }.mkString(";"))}"
+  private def qualityParams: String =
+    s"coef=${TextOps.QualityWStop}/${TextOps.QualityWRep}/${TextOps.QualityWPunct}" +
+      s"+${TextOps.QualityBias},r=${TextOps.QualityDigits}," +
+      s"sw=${constHash(TextOps.AllStopwords.mkString(","))}"
+  private def gopherKey: String =
+    s"rules=${constHash(TextOps.gopherSql)},stop=${constHash(TextOps.GopherStop.mkString(","))}"
+  private def minhashParams: String = s"p=${Dedup.MinhashPerms},n=${Dedup.ShingleN}"
+  private def candParams: String = s"$minhashParams,cap=${Dedup.MaxBucket}"
+  private def verifiedParams: String =
+    s"$minhashParams,j=${Dedup.JaccardThreshold},cap=${Dedup.MaxBucket}"
+  private def hammingLabelParams: String =
+    s"blocks=3,ham=${Dedup.MaxHamming},cap=${Dedup.MaxBucket},degen=${Dedup.DegenShare}"
+  private def ivfParams(k: Int): String =
+    s"i=${Similarity.KMeansIters},m=${Similarity.TrainMod},k=$k"
+  private def semParams(k: Int): String =
+    s"${ivfParams(k)},cap=${Dedup.LabelCap},cos=${Dedup.CosineThreshold}"
+  private def alignParams: String =
+    s"dims=${Multimodal.AlignDims},round=${Multimodal.AlignDigits},bar=ceilhalf"
+  private def dirtyParams: String =
+    s"g=${Pipeline.DecontamGram},bench=lt${Pipeline.BenchDocs}"
+  private def bpeParams: String = s"k=${TextOps.BpeTrainMerges}"
+  private def bpeBigParams: String =
+    s"k=${TextOps.BpeTrainMergesBig},b=${TextOps.BpeTrainBatch}"
+  private def dsirParams(buckets: Long): String =
+    s"b=$buckets,keep=quarter,seed=${TextOps.QualitySeedMinFlags}"
 
   private var rootOverride: Option[String] = None
 
@@ -152,10 +134,7 @@ object AnnModels {
     * every list-probing consumer downstream. */
   def ivfCentroids(s: SparkSession, dir: String): DataFrame = {
     val k = Similarity.ivfK(s, dir)
-    ensure(s, dir, "ivf", table = "embeddings",
-        params =
-        s"i=${Similarity.KMeansIters},m=${Similarity.TrainMod},k=$k") {
-      ivfTrains += 1
+    ensure(s, dir, "ivf", ivfParams(k), table = "embeddings") {
       Similarity.trainIvfCentroids(s, dir,
         Similarity.KMeansIters, Similarity.TrainMod, k)
     }
@@ -166,7 +145,6 @@ object AnnModels {
     s"i=${Similarity.PqIters},m=${Similarity.TrainMod},k=${Similarity.PqCentroids},s=${Similarity.PqSubspaces}x${Similarity.PqSubDims}"
   def pqCodebook(s: SparkSession, dir: String): DataFrame =
     ensure(s, dir, "pq", table = "embeddings", params = PqParams) {
-      pqTrains += 1
       Similarity.trainPqCodebook(s, dir)
     }
 
@@ -185,7 +163,6 @@ object AnnModels {
   def pqCodes(s: SparkSession, dir: String): DataFrame =
     ensure(s, dir, "pqcodes", table = "embeddings",
         params = s"$PqParams,round=4", coalesce1 = false) {
-      pqCodeTrains += 1
       Similarity.pqCodesInline(s, dir)
     }
 
@@ -206,24 +183,11 @@ object AnnModels {
     * the model artifacts but far below corpus size — distinct trigrams,
     * not occurrences), so it keeps its natural partitioning. */
   def trigramLm(s: SparkSession, dir: String): (DataFrame, DataFrame, DataFrame) = {
-      val p = new Path(root(s), key(dir, "lm", LmParams))
-      val parts = Seq("c3", "c2", "u")
-      val gen = ensureGen(s, p, dir, "documents") { genDir =>
-        lmTrains += 1
-        // one cached corpus snapshot feeds all three relation writes (a
-        // mid-train corpus edit cannot yield a mixed trio; released after
-        // the writes — lineage stays intact, so this is safe to drop)
-        val corpus = graft.sources.Tables.load(s, dir, "documents").persist()
-        try {
-          val (c3, c2, u) = TextOps.trainNgramLmOf(corpus)
-          Seq(c3, c2, u).zip(parts).foreach { case (df, part) =>
-            df.write.mode("overwrite")
-              .parquet(new Path(genDir, part).toString)
-          }
-        } finally corpus.unpersist(false)
-      }
-      val dfs = parts.map(part => s.read.parquet(new Path(gen, part).toString))
-      (dfs(0), dfs(1), dfs(2))
+    val dfs = ngramLm(s, dir, "lm", LmParams, Seq("c3", "c2", "u")) { corpus =>
+      val (c3, c2, u) = TextOps.trainNgramLmOf(corpus)
+      Seq(c3, c2, u)
+    }
+    (dfs(0), dfs(1), dfs(2))
   }
 
   /** The 5-gram KNESER-NEY LM's five count relations (c5, c4, c3, c2, u)
@@ -235,21 +199,24 @@ object AnnModels {
     * marker-gated generation. */
   def kn5Lm(s: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame, DataFrame, DataFrame) = {
-    val p = new Path(root(s), key(dir, "lm5", Lm5Params))
-    val parts = Seq("c5", "c4", "c3", "c2", "u")
-    val gen = ensureGen(s, p, dir, "documents") { genDir =>
-      lm5Trains += 1
-      val corpus = graft.sources.Tables.load(s, dir, "documents").persist()
-      try {
-        val (c5, c4, c3, c2, u) = TextOps.trainKn5LmOf(corpus)
-        Seq(c5, c4, c3, c2, u).zip(parts).foreach { case (df, part) =>
-          df.write.mode("overwrite").parquet(new Path(genDir, part).toString)
-        }
-      } finally corpus.unpersist(false)
+    val dfs = ngramLm(s, dir, "lm5", Lm5Params, Seq("c5", "c4", "c3", "c2", "u")) { corpus =>
+      val (c5, c4, c3, c2, u) = TextOps.trainKn5LmOf(corpus)
+      Seq(c5, c4, c3, c2, u)
     }
-    val dfs = parts.map(part => s.read.parquet(new Path(gen, part).toString))
     (dfs(0), dfs(1), dfs(2), dfs(3), dfs(4))
   }
+
+  /** An n-gram LM artifact: `train`'s count relations, one per part. */
+  private def ngramLm(s: SparkSession, dir: String, kind: String, params: String,
+      parts: Seq[String])(train: DataFrame => Seq[DataFrame]): Seq[DataFrame] =
+    ensureParts(s, dir, kind, params, parts) { genDir =>
+      // one cached corpus snapshot feeds every relation write (a mid-train
+      // corpus edit cannot yield a mixed set; released after the writes —
+      // lineage stays intact, so this is safe to drop)
+      val corpus = graft.sources.Tables.load(s, dir, "documents").persist()
+      try train(corpus).zip(parts).foreach { case (df, part) => writePart(genDir, part, df) }
+      finally corpus.unpersist(false)
+    }
 
   /** The corpus KN5 PERPLEXITY relation (doc_id, n_grams, avg_nll) — the
     * 5-gram LM's scores persisted once per corpus state (the pplScores
@@ -258,7 +225,6 @@ object AnnModels {
     * grid (an exact double) — bit-identical round-trip. */
   def ppl5Scores(s: SparkSession, dir: String): DataFrame =
     ensure(s, dir, "ppl5", Lm5Params, coalesce1 = false) {
-      ppl5ScoreTrains += 1
       TextOps.perplexityKn5Inline(s, dir)
     }
 
@@ -269,7 +235,6 @@ object AnnModels {
     * bit-identical to inline. */
   def langidCentroids(s: SparkSession, dir: String): DataFrame =
     ensure(s, dir, "langid", s"b=${TextOps.LangidBuckets},half=even") {
-      langidTrains += 1
       TextOps.trainLangidCentroids(graft.sources.Tables.load(s, dir, "documents"))
     }
 
@@ -280,8 +245,7 @@ object AnnModels {
     * deterministic (count argmax with lexical tie-break), so the artifact
     * is bit-identical to an inline train and the oracle can replay it. */
   def bpeMergeTable(s: SparkSession, dir: String): DataFrame =
-    ensure(s, dir, "bpe", s"k=${TextOps.BpeTrainMerges}") {
-      bpeTrains += 1
+    ensure(s, dir, "bpe", bpeParams) {
       TextOps.bpeTrain(s, dir)
     }
 
@@ -293,7 +257,6 @@ object AnnModels {
     ensure(s, dir, "uni",
         s"l=${UnigramLm.UniMaxPieceLen},seed=${UnigramLm.UniSeedVocab}," +
           s"v=${UnigramLm.UniVocab},em=${UnigramLm.UniIters},grid=1e6") {
-      uniTrains += 1
       UnigramLm.uniTrainOf(graft.sources.Tables.load(s, dir, "documents"))
     }
 
@@ -306,7 +269,6 @@ object AnnModels {
     ensure(s, dir, "unibig",
         s"l=${UnigramLm.UniMaxPieceLen},seed=${UnigramLm.UniSeedVocabBig}," +
           s"v=${UnigramLm.UniVocabBig},em=${UnigramLm.UniItersBig},grid=1e6") {
-      uniBigTrains += 1
       UnigramLm.uniTrainOf(graft.sources.Tables.load(s, dir, "documents"),
         UnigramLm.UniSeedVocabBig, UnigramLm.UniVocabBig, UnigramLm.UniItersBig)
     }
@@ -317,9 +279,7 @@ object AnnModels {
     * `text_bpe_trained_ids_256` chain. Keyed on (k, batch) so the k=8
     * artifact and this one can never shadow each other. */
   def bpeMergeTableBig(s: SparkSession, dir: String): DataFrame =
-    ensure(s, dir, "bpebig",
-        s"k=${TextOps.BpeTrainMergesBig},b=${TextOps.BpeTrainBatch}") {
-      bpeBigTrains += 1
+    ensure(s, dir, "bpebig", bpeBigParams) {
       TextOps.bpeTrainBig(s, dir)
     }
 
@@ -331,7 +291,6 @@ object AnnModels {
   def qualityCentroids(s: SparkSession, dir: String): DataFrame =
     ensure(s, dir, "qualcent",
         s"feat=${TextOps.QualityFeatNames.size},half=even,cap=${TextOps.QmLenCap}") {
-      qualityTrains += 1
       TextOps.trainQualityCentroids(s, dir)
     }
 
@@ -354,38 +313,30 @@ object AnnModels {
     * artifact unmarked and the next access retrains. */
   def ingestGate(s: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame, DataFrame) = {
-      val p = new Path(root(s), key(dir, "ig", s"$LmParams,keep=half,excl=src0"))
-      val parts = Seq("c3", "c2", "u", "thr")
-      val gen = ensureGen(s, p, dir, "documents") { genDir =>
-        ingestGateTrains += 1
-        // ONE cached corpus snapshot feeds every relation below; released
-        // after the writes (cache, not a lineage-truncating checkpoint, so
-        // unpersist is safe and the corpus-sized copy never outlives the
-        // training pass)
-        val corpus = graft.sources.Tables.load(s, dir, "documents")
-          .filter(org.apache.spark.sql.functions.col("source") =!= "src0")
-          .persist()
-        try {
-          val (c3, c2, u) = TextOps.trainNgramLmOf(corpus)
-          // thr derives from the LM relations; materialize them first so
-          // the threshold pass reads the persisted LM instead of recounting
-          Seq(c3, c2, u).zip(parts.take(3)).foreach { case (df, part) =>
-            df.write.mode("overwrite")
-              .parquet(new Path(genDir, part).toString)
-          }
-          val lm = parts.take(3).map(part =>
-            s.read.parquet(new Path(genDir, part).toString))
-          // the logits subtree feeds the census, the count AND the
-          // threshold join — cache the (doc_id, logit8) pairs once
-          val logits = TextOps.ingestLogits(corpus, lm(0), lm(1), lm(2)).persist()
-          try {
-            TextOps.calibratedThresholdOf(logits).coalesce(1)
-              .write.mode("overwrite").parquet(new Path(genDir, parts(3)).toString)
-          } finally logits.unpersist(false)
-        } finally corpus.unpersist(false)
-      }
-      val dfs = parts.map(part => s.read.parquet(new Path(gen, part).toString))
-      (dfs(0), dfs(1), dfs(2), dfs(3))
+    val lmParts = Seq("c3", "c2", "u")
+    val dfs = ensureParts(s, dir, "ig", s"$LmParams,keep=half,excl=src0",
+        lmParts :+ "thr") { genDir =>
+      // ONE cached corpus snapshot feeds every relation below; released
+      // after the writes (cache, not a lineage-truncating checkpoint, so
+      // unpersist is safe and the corpus-sized copy never outlives the
+      // training pass)
+      val corpus = graft.sources.Tables.load(s, dir, "documents")
+        .filter(org.apache.spark.sql.functions.col("source") =!= "src0")
+        .persist()
+      try {
+        val (c3, c2, u) = TextOps.trainNgramLmOf(corpus)
+        // thr derives from the LM relations; materialize them first so
+        // the threshold pass reads the persisted LM instead of recounting
+        Seq(c3, c2, u).zip(lmParts).foreach { case (df, part) => writePart(genDir, part, df) }
+        val lm = lmParts.map(part => s.read.parquet(partPath(genDir, part)))
+        // the logits subtree feeds the census, the count AND the
+        // threshold join — cache the (doc_id, logit8) pairs once
+        val logits = TextOps.ingestLogits(corpus, lm(0), lm(1), lm(2)).persist()
+        try writePart(genDir, "thr", TextOps.calibratedThresholdOf(logits).coalesce(1))
+        finally logits.unpersist(false)
+      } finally corpus.unpersist(false)
+    }
+    (dfs(0), dfs(1), dfs(2), dfs(3))
   }
 
   /** The persisted CORPUS LSH signature index (doc_id, band, h) — the
@@ -399,11 +350,22 @@ object AnnModels {
     * nightly corpus edit re-uses the same store slot instead of
     * accumulating one full index copy per edit. */
   def lshIndex(s: SparkSession, dir: String): DataFrame =
-    ensure(s, dir, "lshidx",
-        s"p=${Dedup.MinhashPerms},n=${Dedup.ShingleN},excl=src0", coalesce1 = false) {
-      lshIndexBuilds += 1
+    ensure(s, dir, "lshidx", s"$minhashParams,excl=src0", coalesce1 = false) {
       Dedup.lshIndexOf(graft.sources.Tables.load(s, dir, "documents")
         .filter(org.apache.spark.sql.functions.col("source") =!= "src0"))
+    }
+
+  /** The corpus VERIFIED near-dup PAIR relation (doc_a, doc_b, jaccard)
+    * — LSH candidates verified by exact n-gram Jaccard, computed once per
+    * corpus state (r13, the SURVEY §16.8 invariant: it feeds the gated
+    * `dedup_minhash_verified`, the source-overlap matrix AND the
+    * survivor-label trainer — three consumers re-ran the whole
+    * candidate+verify chain per query before this). jaccard is an exact
+    * round-4 double, ids are longs — bit-identical round-trip.
+    * Pair-sized (candidate-bounded): natural partitioning. */
+  def verifiedPairs(s: SparkSession, dir: String): DataFrame =
+    ensure(s, dir, "vpairs", verifiedParams, coalesce1 = false) {
+      Dedup.minhashVerifiedInline(s, dir)
     }
 
   /** The persisted SURVIVOR LABELING (doc_id, cluster_id) — the verified
@@ -419,27 +381,8 @@ object AnnModels {
     * deployment that bumps the cap against a long-lived model dir must
     * re-key the WHOLE dependent chain, not just the pair relation.
     * Corpus-sized, so it keeps its natural partitioning. */
-  /** The corpus VERIFIED near-dup PAIR relation (doc_a, doc_b, jaccard)
-    * — LSH candidates verified by exact n-gram Jaccard, computed once per
-    * corpus state (r13, the SURVEY §16.8 invariant: it feeds the gated
-    * `dedup_minhash_verified`, the source-overlap matrix AND the
-    * survivor-label trainer — three consumers re-ran the whole
-    * candidate+verify chain per query before this). jaccard is an exact
-    * round-4 double, ids are longs — bit-identical round-trip.
-    * Pair-sized (candidate-bounded): natural partitioning. */
-  def verifiedPairs(s: SparkSession, dir: String): DataFrame =
-    ensure(s, dir, "vpairs",
-        s"p=${Dedup.MinhashPerms},n=${Dedup.ShingleN},j=${Dedup.JaccardThreshold},cap=${Dedup.MaxBucket}",
-        coalesce1 = false) {
-      verifiedPairBuilds += 1
-      Dedup.minhashVerifiedInline(s, dir)
-    }
-
   def survivorLabels(s: SparkSession, dir: String): DataFrame =
-    ensure(s, dir, "cclab",
-        s"p=${Dedup.MinhashPerms},n=${Dedup.ShingleN},j=${Dedup.JaccardThreshold},cap=${Dedup.MaxBucket}",
-        coalesce1 = false) {
-      survivorBuilds += 1
+    ensure(s, dir, "cclab", verifiedParams, coalesce1 = false) {
       Dedup.survivorLabelsOf(s, dir)
     }
 
@@ -454,7 +397,6 @@ object AnnModels {
     * asset), so it keeps its natural partitioning. */
   def phashIndex(s: SparkSession, dir: String): DataFrame =
     ensure(s, dir, "phidx", "blocks=3,excl=src0", coalesce1 = false) {
-      phashIndexBuilds += 1
       Multimodal.phashIndexOf(graft.sources.Tables.load(s, dir, "documents")
         .filter(org.apache.spark.sql.functions.col("source") =!= "src0"))
     }
@@ -467,7 +409,6 @@ object AnnModels {
     * bit-identical round-trip. Corpus-sized: natural partitioning. */
   def pplScores(s: SparkSession, dir: String): DataFrame =
     ensure(s, dir, "ppl", LmParams, coalesce1 = false) {
-      pplScoreTrains += 1
       TextOps.perplexityInline(s, dir)
     }
 
@@ -481,9 +422,7 @@ object AnnModels {
     * fixed-point long or an exact double (logit8 < 2^53), so the parquet
     * round-trip is bit-identical. Corpus-sized: natural partitioning. */
   def qualityLogits(s: SparkSession, dir: String): DataFrame =
-    ensure(s, dir, "qlog", s"$LmParams,coef=${TextOps.QmBias}/${TextOps.QmStop}/${TextOps.QmRepUni}/${TextOps.QmRep3}/${TextOps.QmPunct}/${TextOps.QmNll}/${TextOps.QmLenPerTok}x${TextOps.QmLenCap}",
-        coalesce1 = false) {
-      qualityLogitTrains += 1
+    ensure(s, dir, "qlog", qlogParams, coalesce1 = false) {
       TextOps.qualityModelInline(s, dir)
     }
 
@@ -498,7 +437,6 @@ object AnnModels {
   def shinglePairs(s: SparkSession, dir: String): DataFrame =
     ensure(s, dir, "shpairs",
         s"n=${Dedup.ShingleN},cap=${Dedup.MaxBucket}", coalesce1 = false) {
-      shinglePairBuilds += 1
       Dedup.shingleInterPairsInline(s, dir)
     }
 
@@ -508,10 +446,7 @@ object AnnModels {
     * trained pack family). Exact longs; corpus-sized, natural
     * partitioning. */
   def trainedMargins(s: SparkSession, dir: String): DataFrame =
-    ensure(s, dir, "qtm",
-        s"fit=rocchio,feat=${TextOps.QualityFeatNames.size},half=even,cap=${TextOps.QmLenCap},seed=${TextOps.QualitySeedMinFlags},$LmParams",
-        coalesce1 = false) {
-      trainedMarginTrains += 1
+    ensure(s, dir, "qtm", qtmParams, coalesce1 = false) {
       TextOps.qualityTrainedInline(s, dir)
     }
 
@@ -523,10 +458,7 @@ object AnnModels {
     * labeling nightly exactly like the text one. Corpus-sized, natural
     * partitioning. */
   def phashLabels(s: SparkSession, dir: String): DataFrame =
-    ensure(s, dir, "phlab",
-        s"blocks=3,ham=${Dedup.MaxHamming},cap=${Dedup.MaxBucket},degen=${Dedup.DegenShare}",
-        coalesce1 = false) {
-      phashLabelBuilds += 1
+    ensure(s, dir, "phlab", hammingLabelParams, coalesce1 = false) {
       Multimodal.phashLabelsOf(s, dir)
     }
 
@@ -537,10 +469,7 @@ object AnnModels {
     * key carries every constant the content depends on (blocks, hamming
     * bar, salt cap, degenerate share — the cclab lesson). */
   def audioLabels(s: SparkSession, dir: String): DataFrame =
-    ensure(s, dir, "aulab",
-        s"blocks=3,ham=${Dedup.MaxHamming},cap=${Dedup.MaxBucket},degen=${Dedup.DegenShare}",
-        coalesce1 = false) {
-      audioLabelBuilds += 1
+    ensure(s, dir, "aulab", hammingLabelParams, coalesce1 = false) {
       Multimodal.audioLabelsOf(s, dir)
     }
 
@@ -550,22 +479,10 @@ object AnnModels {
     * the same Gopher-seed labels, fit and scored once per corpus state.
     * Exact longs; corpus-sized, natural partitioning. */
   def lrMargins(s: SparkSession, dir: String): DataFrame =
-    ensure(s, dir, "qlr",
-        s"fit=lr,k=${TextOps.QualityLrIters},eta=${TextOps.QualityLrEtaNum}/${TextOps.QualityLrEtaDen},ctr=mean-clamp1e4,feat=${TextOps.QualityFeatNames.size},half=even,seed=${TextOps.QualitySeedMinFlags},$LmParams",
-        coalesce1 = false) {
-      lrMarginTrains += 1
+    ensure(s, dir, "qlr", qlrParams, coalesce1 = false) {
       TextOps.qualityLrInline(s, dir)
     }
 
-  /** The INGEST LR ADMISSION MODEL (j, mu, w) — the trained logistic
-    * classifier's 7-row weight relation (j = 0 bias, j = 1..6 the
-    * QualityFeatNames order; exact longs on the fit's own grids), trained
-    * ONCE per corpus state on the ingest convention (source <> 'src0',
-    * nll feature under the SAME registry-served corpus LM the trigram
-    * gate uses — the `ig` artifact, so the LmParams key threads the
-    * dependency). Batch admission broadcasts these 13 longs and scores
-    * new documents with one feature pass — the production shape where
-    * the fastText/logistic quality classifier gates the crawl nightly. */
   /** The HASHED-NGRAM gate's scored relation (doc_id, zft12, ft_keep) —
     * the lrMargins discipline on the fastText-shaped fit (r15): the
     * word+bigram bucket pass and the K-round fit run once per corpus
@@ -578,14 +495,20 @@ object AnnModels {
           s"eta=${TextOps.FtEtaNum}/${TextOps.FtEtaDen},grams=1+2," +
           s"half=even,seed=${TextOps.QualitySeedMinFlags},norm=1e6",
         coalesce1 = false) {
-      ftMarginTrains += 1
       TextOps.qualityFtInline(s, dir)
     }
 
+  /** The INGEST LR ADMISSION MODEL (j, mu, w) — the trained logistic
+    * classifier's 7-row weight relation (j = 0 bias, j = 1..6 the
+    * QualityFeatNames order; exact longs on the fit's own grids), trained
+    * ONCE per corpus state on the ingest convention (source <> 'src0',
+    * nll feature under the SAME registry-served corpus LM the trigram
+    * gate uses — the `ig` artifact, so the LmParams key threads the
+    * dependency). Batch admission broadcasts these 13 longs and scores
+    * new documents with one feature pass — the production shape where
+    * the fastText/logistic quality classifier gates the crawl nightly. */
   def lrGate(s: SparkSession, dir: String): DataFrame =
-    ensure(s, dir, "qlrg",
-        s"fit=lr,k=${TextOps.QualityLrIters},eta=${TextOps.QualityLrEtaNum}/${TextOps.QualityLrEtaDen},ctr=mean-clamp1e4,feat=${TextOps.QualityFeatNames.size},half=even,seed=${TextOps.QualitySeedMinFlags},excl=src0,$LmParams") {
-      lrGateTrains += 1
+    ensure(s, dir, "qlrg", s"$lrFitParams,excl=src0,$LmParams") {
       TextOps.qualityLrGateInline(s, dir)
     }
 
@@ -605,7 +528,6 @@ object AnnModels {
       (census: => DataFrame): Seq[(Int, Long)] =
     ensure(s, dir, s"dg$kind",
         params = s"share=${Dedup.DegenShare},blocks=${Dedup.BlockLayout}") {
-      hammingDegenTrains += 1
       census
     }.collect().map(r => (r.getInt(0), r.getLong(1))).toSeq
 
@@ -627,7 +549,6 @@ object AnnModels {
         params = s"ham=${Dedup.MaxHamming},cap=${Dedup.MaxBucket}," +
           s"share=${Dedup.DegenShare},blocks=${Dedup.BlockLayout}",
         coalesce1 = false) {
-      hammingPairTrains += 1
       train
     }
 
@@ -640,10 +561,8 @@ object AnnModels {
     * round-4 double, ids are longs — bit-identical round-trip.
     * Corpus-sized: natural partitioning. */
   def ivfAssign(s: SparkSession, dir: String): DataFrame =
-    ensure(s, dir, "ivfasn",
-        s"i=${Similarity.KMeansIters},m=${Similarity.TrainMod},k=${Similarity.ivfK(s, dir)},round=4",
+    ensure(s, dir, "ivfasn", s"${ivfParams(Similarity.ivfK(s, dir))},round=4",
         table = "embeddings", coalesce1 = false) {
-      ivfAssignTrains += 1
       Similarity.ivfAssignInline(s, dir)
     }
 
@@ -656,10 +575,8 @@ object AnnModels {
     * labeling nightly exactly like the text one. Corpus-sized, natural
     * partitioning. */
   def semanticLabels(s: SparkSession, dir: String): DataFrame =
-    ensure(s, dir, "semlab",
-        s"i=${Similarity.KMeansIters},m=${Similarity.TrainMod},k=${Similarity.ivfK(s, dir)},cap=${Dedup.LabelCap},cos=${Dedup.CosineThreshold}",
+    ensure(s, dir, "semlab", semParams(Similarity.ivfK(s, dir)),
         table = "embeddings", coalesce1 = false) {
-      semanticLabelTrains += 1
       Dedup.semanticLabInline(s, dir)
     }
 
@@ -675,10 +592,8 @@ object AnnModels {
     * on BOTH source tables: a documents OR embeddings edit retrains.
     * Corpus-sized: natural partitioning. */
   def alignScores(s: SparkSession, dir: String): DataFrame =
-    ensure(s, dir, "align",
-        "dims=64,round=4,bar=ceilhalf",
+    ensure(s, dir, "align", alignParams,
         table = "documents,embeddings", coalesce1 = false) {
-      alignScoreTrains += 1
       Multimodal.textAlignInline(s, dir)
     }
 
@@ -686,10 +601,7 @@ object AnnModels {
     * word lists are code constants the artifact content depends on — a
     * list edit must re-key, and hashing the material beats hand-counting
     * it into the params string. */
-  private def constHash(material: String): String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    md.digest(material.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-  }
+  private def constHash(material: String): String = md5(material).take(12)
 
   /** The corpus MARKER-LANGID relation (doc_id, pred_lang) — the
     * heuristic gate's predictions scored once per corpus state (r16):
@@ -699,10 +611,7 @@ object AnnModels {
     * on a hash of the marker word lists (a list edit re-keys).
     * Corpus-sized: natural partitioning. */
   def langidScores(s: SparkSession, dir: String): DataFrame =
-    ensure(s, dir, "lidsc",
-        s"mk=${constHash(TextOps.Markers.map { case (l, ws) => l + ":" + ws.mkString(",") }.mkString(";"))}",
-        coalesce1 = false) {
-      langidScoreBuilds += 1
+    ensure(s, dir, "lidsc", markersKey, coalesce1 = false) {
       TextOps.langidInline(s, dir)
     }
 
@@ -714,10 +623,7 @@ object AnnModels {
     * carries the composite weights/rounding and the stopword-list
     * hash. */
   def qualityScores(s: SparkSession, dir: String): DataFrame =
-    ensure(s, dir, "qsc",
-        s"coef=5/3/2+2e-1,r=4,src,sw=${constHash(TextOps.AllStopwords.mkString(","))}",
-        coalesce1 = false) {
-      qualityScoreBuilds += 1
+    ensure(s, dir, "qsc", s"$qualityParams,src", coalesce1 = false) {
       TextOps.qualityInline(s, dir)
     }
 
@@ -733,10 +639,7 @@ object AnnModels {
     * All-long columns: bit-identical round-trip. Candidate-bounded size
     * (≤ perms·cap per doc): natural partitioning. */
   def candPairs(s: SparkSession, dir: String): DataFrame =
-    ensure(s, dir, "mhcand",
-        s"p=${Dedup.MinhashPerms},n=${Dedup.ShingleN},cap=${Dedup.MaxBucket}",
-        coalesce1 = false) {
-      candPairBuilds += 1
+    ensure(s, dir, "mhcand", candParams, coalesce1 = false) {
       Dedup.minhashLshInline(s, dir)
     }
 
@@ -748,10 +651,7 @@ object AnnModels {
     * the LSH constants. Long ids + long arrays: bit-identical round-trip.
     * Candidate-bounded size: natural partitioning. */
   def candSigs(s: SparkSession, dir: String): DataFrame =
-    ensure(s, dir, "mhsig",
-        s"p=${Dedup.MinhashPerms},n=${Dedup.ShingleN},cap=${Dedup.MaxBucket}",
-        coalesce1 = false) {
-      candSigBuilds += 1
+    ensure(s, dir, "mhsig", candParams, coalesce1 = false) {
       Dedup.candSigsInline(s, dir)
     }
 
@@ -763,10 +663,7 @@ object AnnModels {
     * columns: bit-identical round-trip. Candidate-doc-token-bounded size:
     * natural partitioning. */
   def candGramCounts(s: SparkSession, dir: String): DataFrame =
-    ensure(s, dir, "mhgc",
-        s"p=${Dedup.MinhashPerms},n=${Dedup.ShingleN},cap=${Dedup.MaxBucket}",
-        coalesce1 = false) {
-      candGramCountBuilds += 1
+    ensure(s, dir, "mhgc", candParams, coalesce1 = false) {
       Dedup.candGramCountsInline(s, dir)
     }
 
@@ -780,10 +677,7 @@ object AnnModels {
     * All-long columns: bit-identical round-trip. Corpus-sized: natural
     * partitioning. */
   def candLabels(s: SparkSession, dir: String): DataFrame =
-    ensure(s, dir, "ccraw",
-        s"p=${Dedup.MinhashPerms},n=${Dedup.ShingleN},cap=${Dedup.MaxBucket}",
-        coalesce1 = false) {
-      candLabelBuilds += 1
+    ensure(s, dir, "ccraw", candParams, coalesce1 = false) {
       Dedup.clusterAssignInline(s, dir)
     }
 
@@ -807,10 +701,7 @@ object AnnModels {
         // previous key covered only 3 of the 8 rule constants, so a
         // threshold edit under a long-lived SPARK_GRAFT_MODEL_DIR served
         // stale flags to all seven consumers)
-        s"rules=${constHash(TextOps.gopherSql)}," +
-          s"stop=${constHash(TextOps.GopherStop.mkString(","))}",
-        coalesce1 = false) {
-      gopherFlagBuilds += 1
+        gopherKey, coalesce1 = false) {
       TextOps.gopherRulesInline(s, dir)
     }
 
@@ -823,9 +714,7 @@ object AnnModels {
     * All-long columns: bit-identical round-trip. Hit-sized (only
     * contaminated docs appear): natural partitioning. */
   def dirtyGrams(s: SparkSession, dir: String): DataFrame =
-    ensure(s, dir, "dirty",
-        s"g=5,bench=lt10", coalesce1 = false) {
-      dirtyGramBuilds += 1
+    ensure(s, dir, "dirty", dirtyParams, coalesce1 = false) {
       Pipeline.decontaminateInline(s, dir)
     }
 
@@ -839,12 +728,148 @@ object AnnModels {
     * the keep rule. logit8 is an exact fixed-point long —
     * bit-identical round-trip. Corpus-sized: natural partitioning. */
   def calibKeep(s: SparkSession, dir: String): DataFrame =
-    ensure(s, dir, "calib",
-        s"$LmParams,coef=${TextOps.QmBias}/${TextOps.QmStop}/${TextOps.QmRepUni}/${TextOps.QmRep3}/${TextOps.QmPunct}/${TextOps.QmNll}/${TextOps.QmLenPerTok}x${TextOps.QmLenCap},rule=ceilhalf",
-        coalesce1 = false) {
-      calibKeepBuilds += 1
+    ensure(s, dir, "calib", calibParams, coalesce1 = false) {
       TextOps.qualityCalibratedOf(TextOps.qualityModel(s, dir))
     }
+
+  /** The per-document SUBWORD pack budgets (source, doc_id, n_tok) — one
+    * artifact per tokenizer budget (r17): the pack family's merge-table
+    * replay over every document's text ran per invocation for a relation
+    * that changes only with the corpus and the merge table (a deployment
+    * persists its tokenized corpus statistics exactly once per tokenizer
+    * release). All-integer counts: bit-identical round-trip.
+    * Corpus-sized: natural partitioning. Keys thread the merge-table
+    * artifact params, so a table change re-keys table AND spine. */
+  def bpeDocTokens(s: SparkSession, dir: String): DataFrame =
+    ensure(s, dir, "bdtok", bpeMergesKey, coalesce1 = false) {
+      Pipeline.bpeDocTokensInline(s, dir)
+    }
+
+  def trainedDocTokens(s: SparkSession, dir: String): DataFrame =
+    ensure(s, dir, "bdtok-t", bpeParams, coalesce1 = false) {
+      Pipeline.trainedDocTokensInline(s, dir)
+    }
+
+  def trainedDocTokensBig(s: SparkSession, dir: String): DataFrame =
+    ensure(s, dir, "bdtok-tb", bpeBigParams, coalesce1 = false) {
+      Pipeline.trainedBigDocTokensInline(s, dir)
+    }
+
+  /** The RESAMPLED-asset fingerprint index (doc_id, out_w, out_h,
+    * resample_md5) — the resized-asset store a vision pipeline
+    * materializes once per corpus state (r17): `mm_resize_sample`'s
+    * typed-closure decode + pooled-luminance resample re-ran per
+    * invocation (the one non-codegen hot path in the multimodal family).
+    * Ints + hex strings: bit-identical round-trip. Corpus-sized: natural
+    * partitioning. */
+  def resampleIndex(s: SparkSession, dir: String): DataFrame =
+    ensure(s, dir, "rsmp",
+        s"side=${Multimodal.MaxSide},pool=lum,h=md5", coalesce1 = false) {
+      Multimodal.resizeSampleInline(s, dir)
+    }
+
+  /** The per-document duplicated-WINDOW stats (doc_id, n_windows,
+    * n_dup_windows, dup_ratio) — the ExactSubstr audit relation (r17):
+    * `dedup_substring` re-exploded every document's windows per
+    * invocation. dup_ratio is a floor-1e6-grid double (parquet stores
+    * doubles bit-exactly); counts are longs. Corpus-sized: natural
+    * partitioning. */
+  def substrStats(s: SparkSession, dir: String): DataFrame =
+    ensure(s, dir, "substat", s"w=${Dedup.SubstrGram},h=xx64",
+        coalesce1 = false) {
+      Dedup.substringDupInline(s, dir)
+    }
+
+  /** The cross-document duplicated WINDOW-START relation (doc_id, pos) —
+    * the shared census product behind the removal/span family (r17):
+    * `dedup_substring_rm`, `_spans` and `_rm_spans` each re-ran the full
+    * window explode + census per invocation; the relation is a pure
+    * function of the corpus and the window constants. All-int columns:
+    * bit-identical round-trip. Duplicated-window-bounded size: natural
+    * partitioning. */
+  def dupStarts(s: SparkSession, dir: String): DataFrame =
+    ensure(s, dir, "dupstart", s"w=${Dedup.SubstrGram},h=xx64",
+        coalesce1 = false) {
+      Dedup.dupStartsInline(s, dir)
+    }
+
+  /** The K-row BOILERPLATE census report (win_text, n_docs,
+    * n_occurrences) — the top-K cross-document-duplicated windows with
+    * text resolved (r17): the report a data engineer reads before
+    * substringRemove; the heavy census pass re-ran per invocation.
+    * Strings + longs: bit-identical round-trip. K rows: coalesce1. */
+  def boilerTop(s: SparkSession, dir: String): DataFrame =
+    ensure(s, dir, "boiltop",
+        s"w=${Dedup.SubstrGram},k=${Dedup.BoilerplateK}") {
+      Dedup.boilerplateTopKInline(s, dir)
+    }
+
+  /** The EMBEDDING near-dup pair table (vec_a, vec_b, cos) — the
+    * SemDeDup-style relation a curation deployment persists nightly
+    * (r17): the salted block self-join + fused cosine re-ran per
+    * `dedup_embedding` invocation. cos is a round-4 double (parquet
+    * stores doubles bit-exactly); ids are longs. Pair-bounded size:
+    * natural partitioning. */
+  def embedPairs(s: SparkSession, dir: String): DataFrame =
+    ensure(s, dir, "embpairs",
+        s"cap=${Dedup.LabelCap},cos=${Dedup.CosineThreshold}",
+        table = "embeddings", coalesce1 = false) {
+      Dedup.embeddingNearDupInline(s, dir)
+    }
+
+  /** The BANDED MinHash-LSH candidate pair relation (doc_a, doc_b) —
+    * [[candPairs]]' precision-leaning b×r sibling (r17): the signature
+    * pass + bucket census + in-bucket pair explode re-ran per
+    * `dedup_minhash_banded` / recall-audit invocation. All-long columns.
+    * Candidate-bounded size: natural partitioning. */
+  def bandedPairs(s: SparkSession, dir: String): DataFrame =
+    ensure(s, dir, "mhband", s"$candParams,r=${Dedup.BandRows}",
+        coalesce1 = false) {
+      Dedup.minhashLshBandedInline(s, dir)
+    }
+
+  /** The trained-tokenizer ID STREAMS (doc_id, token_ids, n_tokens) —
+    * the tokenized corpus a deployment persists once per tokenizer
+    * release (r17): `text_bpe_trained_ids` / `_256` replayed the full
+    * merge chain over every document per invocation. Strings and ints:
+    * bit-identical round-trip. Corpus-sized: natural partitioning. Keys
+    * thread the merge-table artifact params. */
+  def bpeTrainedIdStream(s: SparkSession, dir: String): DataFrame =
+    ensure(s, dir, "btids", bpeParams, coalesce1 = false) {
+      TextOps.bpeTrainedIdsInline(s, dir)
+    }
+
+  def bpeTrainedIdStreamBig(s: SparkSession, dir: String): DataFrame =
+    ensure(s, dir, "btidsbig", bpeBigParams, coalesce1 = false) {
+      TextOps.bpeTrainedIdsBigInline(s, dir)
+    }
+
+  /** The DSIR SCORED relations (doc_id, logw6, dsir_keep) — the
+    * per-document importance scores + keep flags under the persisted
+    * model and bar (r17): the model served since r12, but every
+    * `text_importance_dsir` / `_8k` read re-ran the corpus token explode
+    * + bucket shuffle; CCNet's deployment persists exactly these scores.
+    * Longs/ints only: bit-identical round-trip. Corpus-sized: natural
+    * partitioning. Keyed like the model (b/keep/seed), one per width. */
+  def dsirScored(s: SparkSession, dir: String): DataFrame =
+    ensure(s, dir, "dsirsc", dsirParams(TextOps.DsirBuckets), coalesce1 = false) {
+      TextOps.importanceDsirServe(s, dir)
+    }
+
+  def dsirScored8k(s: SparkSession, dir: String): DataFrame =
+    ensure(s, dir, "dsirsc", dsirParams(TextOps.DsirBuckets8k), coalesce1 = false) {
+      TextOps.importanceDsirServe8k(s, dir)
+    }
+
+  /** The build composition's SHARED key fragment — every gate/pack
+    * constant the manifest depends on besides the model-gate slot: the
+    * full Gopher rule spec + gating flag subset, the survivor-CC
+    * geometry, the contamination spec, the n_tok definition and the pack
+    * geometry. Each manifest artifact prepends its own model-gate
+    * params. */
+  private def buildKeyCommon: String =
+    s"g=($gopherKey,flags=${Pipeline.BuildGopherFlags.mkString("+")}),cc=($verifiedParams)," +
+      s"dirty=($dirtyParams),ntok=ws,pb=${Pipeline.PackBlock},ctx=${Pipeline.CtxTokens}"
 
   /** The CALIBRATED build MANIFEST (source, chunk_id, n_docs, n_tokens,
     * fill_ratio) — the composed capstone persisted once per corpus state
@@ -861,178 +886,8 @@ object AnnModels {
     * n_tokens are exact longs; fill_ratio is a computed double and
     * parquet stores doubles bit-exactly — bit-identical round-trip.
     * Chunk-count-sized (|corpus| / 2048 rows): coalesce1. */
-  /** The per-document SUBWORD pack budgets (source, doc_id, n_tok) — one
-    * artifact per tokenizer budget (r17): the pack family's merge-table
-    * replay over every document's text ran per invocation for a relation
-    * that changes only with the corpus and the merge table (a deployment
-    * persists its tokenized corpus statistics exactly once per tokenizer
-    * release). All-integer counts: bit-identical round-trip.
-    * Corpus-sized: natural partitioning. Keys thread the merge-table
-    * artifact params, so a table change re-keys table AND spine. */
-  def bpeDocTokens(s: SparkSession, dir: String): DataFrame =
-    ensure(s, dir, "bdtok",
-        s"mrg=${constHash(TextOps.BpeMerges.map(p => p._1 + "+" + p._2).mkString(";"))}",
-        coalesce1 = false) {
-      bpeDocTokenBuilds += 1
-      Pipeline.bpeDocTokensInline(s, dir)
-    }
-
-  def trainedDocTokens(s: SparkSession, dir: String): DataFrame =
-    ensure(s, dir, "bdtok-t", s"k=${TextOps.BpeTrainMerges}",
-        coalesce1 = false) {
-      trainedDocTokenBuilds += 1
-      Pipeline.trainedDocTokensInline(s, dir)
-    }
-
-  def trainedDocTokensBig(s: SparkSession, dir: String): DataFrame =
-    ensure(s, dir, "bdtok-tb",
-        s"k=${TextOps.BpeTrainMergesBig},b=${TextOps.BpeTrainBatch}",
-        coalesce1 = false) {
-      trainedBigDocTokenBuilds += 1
-      Pipeline.trainedBigDocTokensInline(s, dir)
-    }
-
-  /** The RESAMPLED-asset fingerprint index (doc_id, out_w, out_h,
-    * resample_md5) — the resized-asset store a vision pipeline
-    * materializes once per corpus state (r17): `mm_resize_sample`'s
-    * typed-closure decode + pooled-luminance resample re-ran per
-    * invocation (the one non-codegen hot path in the multimodal family).
-    * Ints + hex strings: bit-identical round-trip. Corpus-sized: natural
-    * partitioning. */
-  def resampleIndex(s: SparkSession, dir: String): DataFrame =
-    ensure(s, dir, "rsmp",
-        s"side=${Multimodal.MaxSide},pool=lum,h=md5", coalesce1 = false) {
-      resampleBuilds += 1
-      Multimodal.resizeSampleInline(s, dir)
-    }
-
-  /** The per-document duplicated-WINDOW stats (doc_id, n_windows,
-    * n_dup_windows, dup_ratio) — the ExactSubstr audit relation (r17):
-    * `dedup_substring` re-exploded every document's windows per
-    * invocation. dup_ratio is a floor-1e6-grid double (parquet stores
-    * doubles bit-exactly); counts are longs. Corpus-sized: natural
-    * partitioning. */
-  def substrStats(s: SparkSession, dir: String): DataFrame =
-    ensure(s, dir, "substat", s"w=${Dedup.SubstrGram},h=xx64",
-        coalesce1 = false) {
-      substrStatBuilds += 1
-      Dedup.substringDupInline(s, dir)
-    }
-
-  /** The cross-document duplicated WINDOW-START relation (doc_id, pos) —
-    * the shared census product behind the removal/span family (r17):
-    * `dedup_substring_rm`, `_spans` and `_rm_spans` each re-ran the full
-    * window explode + census per invocation; the relation is a pure
-    * function of the corpus and the window constants. All-int columns:
-    * bit-identical round-trip. Duplicated-window-bounded size: natural
-    * partitioning. */
-  def dupStarts(s: SparkSession, dir: String): DataFrame =
-    ensure(s, dir, "dupstart", s"w=${Dedup.SubstrGram},h=xx64",
-        coalesce1 = false) {
-      dupStartBuilds += 1
-      Dedup.dupStartsInline(s, dir)
-    }
-
-  /** The K-row BOILERPLATE census report (win_text, n_docs,
-    * n_occurrences) — the top-K cross-document-duplicated windows with
-    * text resolved (r17): the report a data engineer reads before
-    * substringRemove; the heavy census pass re-ran per invocation.
-    * Strings + longs: bit-identical round-trip. K rows: coalesce1. */
-  def boilerTop(s: SparkSession, dir: String): DataFrame =
-    ensure(s, dir, "boiltop",
-        s"w=${Dedup.SubstrGram},k=${Dedup.BoilerplateK}") {
-      boilerTopBuilds += 1
-      Dedup.boilerplateTopKInline(s, dir)
-    }
-
-  /** The EMBEDDING near-dup pair table (vec_a, vec_b, cos) — the
-    * SemDeDup-style relation a curation deployment persists nightly
-    * (r17): the salted block self-join + fused cosine re-ran per
-    * `dedup_embedding` invocation. cos is a round-4 double (parquet
-    * stores doubles bit-exactly); ids are longs. Pair-bounded size:
-    * natural partitioning. */
-  def embedPairs(s: SparkSession, dir: String): DataFrame =
-    ensure(s, dir, "embpairs",
-        s"cap=${Dedup.LabelCap},cos=${Dedup.CosineThreshold}",
-        table = "embeddings", coalesce1 = false) {
-      embedPairBuilds += 1
-      Dedup.embeddingNearDupInline(s, dir)
-    }
-
-  /** The BANDED MinHash-LSH candidate pair relation (doc_a, doc_b) —
-    * [[candPairs]]' precision-leaning b×r sibling (r17): the signature
-    * pass + bucket census + in-bucket pair explode re-ran per
-    * `dedup_minhash_banded` / recall-audit invocation. All-long columns.
-    * Candidate-bounded size: natural partitioning. */
-  def bandedPairs(s: SparkSession, dir: String): DataFrame =
-    ensure(s, dir, "mhband",
-        s"p=${Dedup.MinhashPerms},n=${Dedup.ShingleN},cap=${Dedup.MaxBucket}," +
-          s"r=${Dedup.BandRows}",
-        coalesce1 = false) {
-      bandedPairBuilds += 1
-      Dedup.minhashLshBandedInline(s, dir)
-    }
-
-  /** The trained-tokenizer ID STREAMS (doc_id, token_ids, n_tokens) —
-    * the tokenized corpus a deployment persists once per tokenizer
-    * release (r17): `text_bpe_trained_ids` / `_256` replayed the full
-    * merge chain over every document per invocation. Strings and ints:
-    * bit-identical round-trip. Corpus-sized: natural partitioning. Keys
-    * thread the merge-table artifact params. */
-  def bpeTrainedIdStream(s: SparkSession, dir: String): DataFrame =
-    ensure(s, dir, "btids", s"k=${TextOps.BpeTrainMerges}",
-        coalesce1 = false) {
-      bpeIdStreamBuilds += 1
-      TextOps.bpeTrainedIdsInline(s, dir)
-    }
-
-  def bpeTrainedIdStreamBig(s: SparkSession, dir: String): DataFrame =
-    ensure(s, dir, "btidsbig",
-        s"k=${TextOps.BpeTrainMergesBig},b=${TextOps.BpeTrainBatch}",
-        coalesce1 = false) {
-      bpeIdStreamBigBuilds += 1
-      TextOps.bpeTrainedIdsBigInline(s, dir)
-    }
-
-  /** The DSIR SCORED relations (doc_id, logw6, dsir_keep) — the
-    * per-document importance scores + keep flags under the persisted
-    * model and bar (r17): the model served since r12, but every
-    * `text_importance_dsir` / `_8k` read re-ran the corpus token explode
-    * + bucket shuffle; CCNet's deployment persists exactly these scores.
-    * Longs/ints only: bit-identical round-trip. Corpus-sized: natural
-    * partitioning. Keyed like the model (b/keep/seed), one per width. */
-  def dsirScored(s: SparkSession, dir: String): DataFrame =
-    ensure(s, dir, "dsirsc",
-        s"b=${TextOps.DsirBuckets},keep=quarter,seed=${TextOps.QualitySeedMinFlags}",
-        coalesce1 = false) {
-      dsirScoredBuilds += 1
-      TextOps.importanceDsirServe(s, dir)
-    }
-
-  def dsirScored8k(s: SparkSession, dir: String): DataFrame =
-    ensure(s, dir, "dsirsc",
-        s"b=${TextOps.DsirBuckets8k},keep=quarter,seed=${TextOps.QualitySeedMinFlags}",
-        coalesce1 = false) {
-      dsirScoredBuilds += 1
-      TextOps.importanceDsirServe8k(s, dir)
-    }
-
-  /** The build composition's SHARED key fragment — every gate/pack
-    * constant the manifest depends on besides the model-gate slot: the
-    * full Gopher rule spec + gating flag subset, the survivor-CC
-    * geometry, the contamination spec, the n_tok definition and the pack
-    * geometry. Each manifest artifact prepends its own model-gate
-    * params. */
-  private def buildKeyCommon: String =
-    s"g=${constHash(TextOps.gopherSql + ":" + Pipeline.BuildGopherFlags.mkString(","))}," +
-      s"cc=p${Dedup.MinhashPerms}n${Dedup.ShingleN}j${Dedup.JaccardThreshold}cap${Dedup.MaxBucket}," +
-      s"dirty=5lt10,ntok=ws,pb=${Pipeline.PackBlock},ctx=${Pipeline.CtxTokens}"
-
   def calibManifest(s: SparkSession, dir: String): DataFrame =
-    ensure(s, dir, "bldcal",
-        s"$LmParams,coef=${TextOps.QmBias}/${TextOps.QmStop}/${TextOps.QmRepUni}/${TextOps.QmRep3}/${TextOps.QmPunct}/${TextOps.QmNll}/${TextOps.QmLenPerTok}x${TextOps.QmLenCap},rule=ceilhalf," +
-          buildKeyCommon) {
-      calibManifestBuilds += 1
+    ensure(s, dir, "bldcal", s"$calibParams,$buildKeyCommon") {
       Pipeline.buildCalibratedInline(s, dir)
     }
 
@@ -1043,26 +898,17 @@ object AnnModels {
     * strings, so a gate-constant change re-keys gate AND manifest
     * together). */
   def buildManifest(s: SparkSession, dir: String): DataFrame =
-    ensure(s, dir, "bldmod",
-        s"$LmParams,coef=${TextOps.QmBias}/${TextOps.QmStop}/${TextOps.QmRepUni}/${TextOps.QmRep3}/${TextOps.QmPunct}/${TextOps.QmNll}/${TextOps.QmLenPerTok}x${TextOps.QmLenCap},rule=model0," +
-          buildKeyCommon) {
-      buildManifestBuilds += 1
+    ensure(s, dir, "bldmod", s"$qlogParams,rule=model0,$buildKeyCommon") {
       Pipeline.buildInline(s, dir)
     }
 
   def trainedManifest(s: SparkSession, dir: String): DataFrame =
-    ensure(s, dir, "bldqtm",
-        s"fit=rocchio,feat=${TextOps.QualityFeatNames.size},half=even,cap=${TextOps.QmLenCap},seed=${TextOps.QualitySeedMinFlags},$LmParams,rule=margin0," +
-          buildKeyCommon) {
-      trainedManifestBuilds += 1
+    ensure(s, dir, "bldqtm", s"$qtmParams,rule=margin0,$buildKeyCommon") {
       Pipeline.buildTrainedInline(s, dir)
     }
 
   def lrManifest(s: SparkSession, dir: String): DataFrame =
-    ensure(s, dir, "bldqlr",
-        s"fit=lr,k=${TextOps.QualityLrIters},eta=${TextOps.QualityLrEtaNum}/${TextOps.QualityLrEtaDen},ctr=mean-clamp1e4,feat=${TextOps.QualityFeatNames.size},half=even,seed=${TextOps.QualitySeedMinFlags},$LmParams,rule=z0," +
-          buildKeyCommon) {
-      lrManifestBuilds += 1
+    ensure(s, dir, "bldqlr", s"$qlrParams,rule=z0,$buildKeyCommon") {
       Pipeline.buildLrInline(s, dir)
     }
 
@@ -1085,14 +931,9 @@ object AnnModels {
         // not just the bar — key them like curateKeyCommon does (the
         // gopherFlags ADVICE-r16 class of gap: an uncovered constant +
         // a long-lived SPARK_GRAFT_MODEL_DIR = silently stale flags)
-        s"lang=en,mk=${constHash(TextOps.Markers.map { case (l, ws) => l + ":" + ws.mkString(",") }.mkString(";"))}," +
-          s"coef=5/3/2+2e-1,r=4,sw=${constHash(TextOps.AllStopwords.mkString(","))}," +
-          s"q=${Pipeline.QualityThreshold}," +
-          s"sem=i${Similarity.KMeansIters}m${Similarity.TrainMod}k${Similarity.ivfK(s, dir)}" +
-          s"cap${Dedup.LabelCap}cos${Dedup.CosineThreshold}," +
-          "align=dims64r4ceilhalf",
+        s"lang=en,$markersKey,$qualityParams,q=${Pipeline.QualityThreshold}," +
+          s"sem=(${semParams(Similarity.ivfK(s, dir))}),align=($alignParams)",
         table = "documents,embeddings", coalesce1 = false) {
-      funnelFlagBuilds += 1
       Pipeline.funnelFlagsInline(s, dir)
     }
 
@@ -1113,7 +954,6 @@ object AnnModels {
         s"t=$tables,p=$planes,cap=${Similarity.GraphBucketCap}," +
           s"k=${Similarity.GraphK},target=${Similarity.GraphSizeTarget}",
         table = "embeddings", coalesce1 = false) {
-      knnGraphBuilds += 1
       Similarity.knnGraphTuned(s, dir, tables, planes, Similarity.GraphBucketCap)
     }
   }
@@ -1124,9 +964,7 @@ object AnnModels {
     * buildKeyCommon discipline: a gate-constant edit re-keys every
     * manifest that composes the gate). */
   private def curateKeyCommon: String =
-    s"lang=en,mk=${constHash(TextOps.Markers.map { case (l, ws) => l + ":" + ws.mkString(",") }.mkString(";"))}," +
-      s"coef=5/3/2+2e-1,r=4,sw=${constHash(TextOps.AllStopwords.mkString(","))}," +
-      s"q=${Pipeline.QualityThreshold},ex=md5min"
+    s"lang=en,$markersKey,$qualityParams,q=${Pipeline.QualityThreshold},ex=md5min"
 
   /** The CURATED document manifests — each curate capstone's survivor
     * relation persisted once per corpus state (r17 batch 3): the curated
@@ -1139,46 +977,32 @@ object AnnModels {
     * own geometry). */
   def curateManifest(s: SparkSession, dir: String): DataFrame =
     ensure(s, dir, "curheur", curateKeyCommon, coalesce1 = false) {
-      curateBuilds += 1
       Pipeline.curateInline(s, dir)
     }
 
   def curateModelManifest(s: SparkSession, dir: String): DataFrame =
-    ensure(s, dir, "curmod",
-        s"lang=en,mk=${constHash(TextOps.Markers.map { case (l, ws) => l + ":" + ws.mkString(",") }.mkString(";"))}," +
-          s"$LmParams,coef=${TextOps.QmBias}/${TextOps.QmStop}/${TextOps.QmRepUni}/${TextOps.QmRep3}/${TextOps.QmPunct}/${TextOps.QmNll}/${TextOps.QmLenPerTok}x${TextOps.QmLenCap},rule=model0,ex=md5min",
+    ensure(s, dir, "curmod", s"lang=en,$markersKey,$qlogParams,rule=model0,ex=md5min",
         coalesce1 = false) {
-      curateModelBuilds += 1
       Pipeline.curateModelInline(s, dir)
     }
 
   def curateNearDupManifest(s: SparkSession, dir: String): DataFrame =
-    ensure(s, dir, "curnd",
-        s"$curateKeyCommon," +
-          s"cc=p${Dedup.MinhashPerms}n${Dedup.ShingleN}j${Dedup.JaccardThreshold}cap${Dedup.MaxBucket}",
+    ensure(s, dir, "curnd", s"$curateKeyCommon,cc=($verifiedParams)",
         coalesce1 = false) {
-      curateNearDupBuilds += 1
       Pipeline.curateNearDupInline(s, dir)
     }
 
   def curateSemanticManifest(s: SparkSession, dir: String): DataFrame =
     ensure(s, dir, "cursem",
-        s"$curateKeyCommon," +
-          s"sem=i${Similarity.KMeansIters}m${Similarity.TrainMod}k${Similarity.ivfK(s, dir)}" +
-          s"cap${Dedup.LabelCap}cos${Dedup.CosineThreshold}",
+        s"$curateKeyCommon,sem=(${semParams(Similarity.ivfK(s, dir))})",
         table = "documents,embeddings", coalesce1 = false) {
-      curateSemanticBuilds += 1
       Pipeline.curateSemanticInline(s, dir)
     }
 
   def curateAlignedManifest(s: SparkSession, dir: String): DataFrame =
     ensure(s, dir, "curalg",
-        s"$curateKeyCommon," +
-          s"sem=i${Similarity.KMeansIters}m${Similarity.TrainMod}k${Similarity.ivfK(s, dir)}" +
-          s"cap${Dedup.LabelCap}cos${Dedup.CosineThreshold}," +
-          "align=dims64r4ceilhalf",
+        s"$curateKeyCommon,sem=(${semParams(Similarity.ivfK(s, dir))}),align=($alignParams)",
         table = "documents,embeddings", coalesce1 = false) {
-      curateAlignedBuilds += 1
       Pipeline.curateAlignedInline(s, dir)
     }
 
@@ -1188,23 +1012,17 @@ object AnnModels {
     * (r17 batch 3): every read re-scanned corpus text for the token
     * census. All-long columns: bit-identical round-trip. |sources| rows:
     * one file. */
+  private def srcStatParams: String = s"ntok=ws,g=($gopherKey),cc=($verifiedParams)"
+
   def srcStats(s: SparkSession, dir: String): DataFrame =
-    ensure(s, dir, "srcst",
-        s"ntok=ws,g=${constHash(TextOps.gopherSql)}," +
-          s"stop=${constHash(TextOps.GopherStop.mkString(","))}," +
-          s"cc=p${Dedup.MinhashPerms}n${Dedup.ShingleN}j${Dedup.JaccardThreshold}cap${Dedup.MaxBucket}") {
-      srcStatBuilds += 1
+    ensure(s, dir, "srcst", srcStatParams) {
       TextOps.sourceStatsInline(s, dir)
     }
 
   def curateSourceManifest(s: SparkSession, dir: String): DataFrame =
     ensure(s, dir, "cursrc",
-        s"ntok=ws,g=${constHash(TextOps.gopherSql)}," +
-          s"stop=${constHash(TextOps.GopherStop.mkString(","))}," +
-          s"cc=p${Dedup.MinhashPerms}n${Dedup.ShingleN}j${Dedup.JaccardThreshold}cap${Dedup.MaxBucket}," +
-          s"slack=${Pipeline.SourceDupSlackPpm},rule=half/2x",
+        s"$srcStatParams,slack=${Pipeline.SourceDupSlackPpm},rule=half/2x",
         coalesce1 = false) {
-      curateSourceBuilds += 1
       Pipeline.curateSourceInline(s, dir)
     }
 
@@ -1222,19 +1040,16 @@ object AnnModels {
 
   def bpeStaticVocab(s: SparkSession, dir: String): DataFrame =
     ensure(s, dir, "bvoc", bpeMergesKey) {
-      bpeStaticVocabBuilds += 1
       TextOps.bpeVocabInline(s, dir)
     }
 
   def bpeStaticIdStream(s: SparkSession, dir: String): DataFrame =
     ensure(s, dir, "bids", bpeMergesKey, coalesce1 = false) {
-      bpeStaticIdStreamBuilds += 1
       TextOps.bpeIdsInline(s, dir)
     }
 
   def bpeDecodeAudit(s: SparkSession, dir: String): DataFrame =
     ensure(s, dir, "bdec", bpeMergesKey, coalesce1 = false) {
-      bpeDecodeAuditBuilds += 1
       TextOps.bpeDecodeInline(s, dir)
     }
 
@@ -1250,7 +1065,6 @@ object AnnModels {
     ensure(s, dir, "ilv",
         s"sb=${Pipeline.ShuffleBlock},temper=sqrt1e6,key=1e9div,h=md5h64",
         coalesce1 = false) {
-      interleaveOrderBuilds += 1
       Pipeline.interleaveInline(s, dir)
     }
 
@@ -1258,7 +1072,6 @@ object AnnModels {
     ensure(s, dir, "curric",
         s"$LmParams,tiers=tertile,sb=${Pipeline.ShuffleBlock},h=md5h64",
         coalesce1 = false) {
-      curriculumOrderBuilds += 1
       Pipeline.curriculumInline(s, dir)
     }
 
@@ -1271,7 +1084,6 @@ object AnnModels {
     * exact integers — bit-identical round-trip. */
   def tokenTotals(s: SparkSession, dir: String): DataFrame =
     ensure(s, dir, "toktot", "tok=ws") {
-      tokenTotalTrains += 1
       import org.apache.spark.sql.functions.sum
       graft.sources.Tables.load(s, dir, "documents")
         .groupBy("source")
@@ -1322,38 +1134,32 @@ object AnnModels {
   private def dsirArtifact(s: SparkSession, dir: String, kind: String,
       excludeSrc0: Boolean,
       buckets: Long = TextOps.DsirBuckets): (DataFrame, DataFrame) = {
-      val excl = if (excludeSrc0) ",excl=src0" else ""
-      val p = new Path(root(s), key(dir, kind,
-        s"b=$buckets,keep=quarter,seed=${TextOps.QualitySeedMinFlags}$excl"))
-      val gen = ensureGen(s, p, dir, "documents") { genDir =>
-        dsirTrains += 1
-        import org.apache.spark.sql.functions.col
-        val base = graft.sources.Tables.load(s, dir, "documents")
-        val corpus = if (excludeSrc0) base.filter(col("source") =!= "src0") else base
-        // ONE cached (doc, bucket) relation feeds the model counts AND the
-        // threshold's scoring pass; cache (not a lineage-truncating
-        // checkpoint, same discipline as the ingest-gate trainer) released
-        // after the writes, so the corpus-scale copy never outlives
-        // training. Mid-train corpus-edit consistency is commitIfFresh's
-        // job, not the cache's.
-        val wt = TextOps.dsirWt(corpus, buckets).persist()
-        try {
-          TextOps.dsirLr(wt, buckets).coalesce(1)
-            .write.mode("overwrite").parquet(new Path(genDir, "lr").toString)
-          val lr = s.read.parquet(new Path(genDir, "lr").toString)
-          val s6 = TextOps.dsirScores(
-            wt.select(col("doc_id"), col("b"), col("occ")), lr).persist()
-          try {
-            TextOps.dsirThr(s6).coalesce(1)
-              .write.mode("overwrite").parquet(new Path(genDir, "thr").toString)
-          } finally s6.unpersist(false)
-        } finally wt.unpersist(false)
-      }
-      (s.read.parquet(new Path(gen, "lr").toString),
-        s.read.parquet(new Path(gen, "thr").toString))
+    val excl = if (excludeSrc0) ",excl=src0" else ""
+    val dfs = ensureParts(s, dir, kind, dsirParams(buckets) + excl,
+        Seq("lr", "thr")) { genDir =>
+      import org.apache.spark.sql.functions.col
+      val base = graft.sources.Tables.load(s, dir, "documents")
+      val corpus = if (excludeSrc0) base.filter(col("source") =!= "src0") else base
+      // ONE cached (doc, bucket) relation feeds the model counts AND the
+      // threshold's scoring pass; cache (not a lineage-truncating
+      // checkpoint, same discipline as the ingest-gate trainer) released
+      // after the writes, so the corpus-scale copy never outlives
+      // training. Mid-train corpus-edit consistency is commitIfFresh's
+      // job, not the cache's.
+      val wt = TextOps.dsirWt(corpus, buckets).persist()
+      try {
+        writePart(genDir, "lr", TextOps.dsirLr(wt, buckets).coalesce(1))
+        val lr = s.read.parquet(partPath(genDir, "lr"))
+        val s6 = TextOps.dsirScores(
+          wt.select(col("doc_id"), col("b"), col("occ")), lr).persist()
+        try writePart(genDir, "thr", TextOps.dsirThr(s6).coalesce(1))
+        finally s6.unpersist(false)
+      } finally wt.unpersist(false)
     }
+    (dfs(0), dfs(1))
+  }
 
-  /** Corpus-freshness fingerprint of the table backing an artifact: the
+  /** Corpus-freshness fingerprint of the table(s) backing an artifact: the
     * sorted (relative path, length, mtime) triples of every file under
     * `dir/table.parquet`, RECURSIVELY (a partitioned/nested layout's leaf
     * files under `key=value/` subdirectories are fingerprinted too —
@@ -1366,28 +1172,26 @@ object AnnModels {
     * streaming ingest probe would miss every corpus document added after
     * index build — silent wrong answers, not just staleness.
     *
+    * Several tables (comma-separated): an artifact derived from several
+    * relations (e.g. the alignment scores: documents × embeddings) must
+    * retrain when ANY of them changes, so their per-table fingerprints
+    * concatenate into one key.
+    *
+    * Exposed for corpus-derived memos that must share the registry's
+    * freshness discipline (Similarity.ivfK — ADVICE r15: a sizing memo
+    * keyed on the dir alone survives an in-place corpus edit the artifact
+    * fingerprints catch, silently splitting the geometry between key and
+    * content).
+    *
     * Granularity caveat: a rewrite that preserves every file's relative
     * path AND byte length within one filesystem mtime tick (1 ms on
     * HDFS/local, 1 s on some object stores) is below this fingerprint's
     * resolution — the standard mtime-based cache-validity trade, same as
     * Spark's own FileStreamSource. A missing table fingerprints as
     * "absent" (the training query will surface the real error). */
-  /** Corpus-state fingerprint over one or more tables (comma-separated):
-    * an artifact derived from several relations (e.g. the alignment
-    * scores: documents × embeddings) must retrain when ANY of them
-    * changes, so their per-table fingerprints concatenate into one key. */
-  /** The per-table fingerprint, exposed for corpus-derived memos that
-    * must share the registry's freshness discipline (Similarity.ivfK —
-    * ADVICE r15: a sizing memo keyed on the dir alone survives an
-    * in-place corpus edit the artifact fingerprints catch, silently
-    * splitting the geometry between key and content). */
   private[graft] def tableFingerprint(s: SparkSession, dir: String,
-      table: String): String = fingerprint(s, dir, table)
-
-  private def fingerprint(s: SparkSession, dir: String, table: String): String =
-    if (table.indexOf(',') >= 0)
-      table.split(",").map(t => fingerprintOne(s, dir, t)).mkString("||")
-    else fingerprintOne(s, dir, table)
+      table: String): String =
+    table.split(",").map(t => fingerprintOne(s, dir, t)).mkString("||")
 
   private def fingerprintOne(s: SparkSession, dir: String, table: String): String = {
     val p = new Path(dir, s"$table.parquet")
@@ -1412,36 +1216,31 @@ object AnnModels {
   /** Stable artifact name: (dataset dir, training constants) only — the
     * corpus fingerprint deliberately stays OUT of the name (it lives in
     * the completion marker) so retraining overwrites in place. */
-  private def key(dir: String, kind: String, params: String): String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val h = md.digest(s"$dir|$params".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(16)
-    s"$kind-$h"
-  }
+  private def key(dir: String, kind: String, params: String): String =
+    s"$kind-${md5(s"$dir|$params").take(16)}"
+
+  private def md5(text: String): String =
+    java.security.MessageDigest.getInstance("MD5")
+      .digest(text.getBytes("UTF-8")).map("%02x".format(_)).mkString
 
   private def markerPath(p: Path) = new Path(p, "_GRAFT_COMPLETE")
 
-  /** Generation directory names: retrains land in a NEW `g-<md5(fp)>[-k]`
-    * subdirectory of the stable artifact key instead of overwriting the
-    * served files in place — a DataFrame handle a live consumer already
-    * holds (e.g. a running stream's static join side) stays readable
-    * across ONE retrain. [[gcGenerations]] keeps exactly the current and
-    * previous generation, so the store stays bounded at two copies per
-    * (dataset, constants) regardless of corpus churn. */
-  private def genName(fp: String): String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    "g-" + md.digest(fp.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(16)
-  }
-
-  /** A generation name NO retrain has used before under key `p`: the
-    * fingerprint hash, suffixed `-1`, `-2`, … past any directory that
-    * already exists. Uniqueness per retrain matters when a corpus REVERTS
-    * to an earlier fingerprint (A→B→A): a name reuse would retrain by
-    * overwriting gen(A) in place — the very directory kept as 'previous'
-    * that a live handle may still reference (ADVICE r11). The marker
-    * records which name actually serves, so lookup never recomputes it. */
+  /** A generation name NO retrain has used before under key `p`: retrains
+    * land in a NEW `g-<md5(fp)>[-k]` subdirectory of the stable artifact
+    * key instead of overwriting the served files in place — a DataFrame
+    * handle a live consumer already holds (e.g. a running stream's static
+    * join side) stays readable across ONE retrain. [[gcGenerations]] keeps
+    * exactly the current and previous generation, so the store stays
+    * bounded at two copies per (dataset, constants) regardless of corpus
+    * churn. The fingerprint hash is suffixed `-1`, `-2`, … past any
+    * directory that already exists. Uniqueness per retrain matters when a
+    * corpus REVERTS to an earlier fingerprint (A→B→A): a name reuse would
+    * retrain by overwriting gen(A) in place — the very directory kept as
+    * 'previous' that a live handle may still reference (ADVICE r11). The
+    * marker records which name actually serves, so lookup never recomputes
+    * it. */
   private def freshGenName(fs: FileSystem, p: Path, fp: String): String = {
-    val base = genName(fp)
+    val base = "g-" + md5(fp).take(16)
     Iterator.from(0)
       .map(i => if (i == 0) base else s"$base-$i")
       .find(n => !fs.exists(new Path(p, n)))
@@ -1449,41 +1248,30 @@ object AnnModels {
   }
 
   /** The marker records (corpus fingerprint, serving generation name),
-    * newline-separated. Pre-r12 markers carried the fingerprint only —
-    * their generation name is recomputed as `genName(fp)` (the naming
-    * those rounds used), so an existing store keeps serving unchanged. */
+    * newline-separated. A marker without a generation line reads as
+    * absent, so the next access retrains. */
   private def readMarker(fs: FileSystem, p: Path): Option[(String, String)] = {
     val m = markerPath(p)
     if (!fs.exists(m)) None
     else {
       val in = fs.open(m)
-      try {
-        val bytes = new java.io.ByteArrayOutputStream()
-        val buf = new Array[Byte](8192)
-        var n = in.read(buf)
-        while (n >= 0) { bytes.write(buf, 0, n); n = in.read(buf) }
-        val lines = new String(bytes.toByteArray, "UTF-8").split("\n", 2)
-        val fp = lines(0)
-        Some((fp, if (lines.length > 1 && lines(1).nonEmpty) lines(1) else genName(fp)))
+      try new String(in.readAllBytes(), "UTF-8").split("\n", 2) match {
+        case Array(fp, gen) if gen.nonEmpty => Some((fp, gen))
+        case _ => None
       } finally in.close()
     }
   }
-
-  /** An artifact serves iff its marker exists and records the corpus's
-    * CURRENT fingerprint. The marker is written last (after every
-    * relation's parquet commit), so it also subsumes the torn-write
-    * guard the per-directory _SUCCESS probe used to provide. */
-  private def complete(fs: FileSystem, p: Path, fp: String): Boolean =
-    readMarker(fs, p).exists(_._1 == fp)
 
   /** Mark the artifact complete — but only if the corpus still
     * fingerprints as it did when training started. A mid-train corpus
     * mutation leaves the artifact unmarked, so the next access retrains
     * against the new state instead of serving a mixed one. Returns
-    * whether the marker was committed. */
+    * whether the marker was committed. The marker is written last (after
+    * every relation's parquet commit), so it also subsumes the torn-write
+    * guard the per-directory _SUCCESS probe used to provide. */
   private def commitIfFresh(s: SparkSession, fs: FileSystem, p: Path,
       fp: String, gen: String, dir: String, table: String): Boolean =
-    fingerprint(s, dir, table) == fp && {
+    tableFingerprint(s, dir, table) == fp && {
       // Write-then-RENAME, never truncate-in-place: an in-place overwrite
       // leaves a window where a lock-free reader (same or another process)
       // sees a torn marker — fp line intact, generation line missing — and
@@ -1512,81 +1300,45 @@ object AnnModels {
           st.getPath.getName.startsWith("g-") && !keep(st.getPath.getName))
         .foreach(st => fs.delete(st.getPath, true))
 
-  /** Roots already swept by [[migrateLegacy]] this JVM. */
-  private val sweptRoots = scala.collection.mutable.Set.empty[String]
-
-  /** One-time store migration (ADVICE r11): pre-r11 artifact entries were
-    * keyed with the corpus FINGERPRINT in the directory name and gated by
-    * parquet `_SUCCESS` files — the generational restructure orphaned
-    * them (their keys are never generated again, so they are never
-    * served and never GC'd: retained garbage in a long-lived
-    * SPARK_GRAFT_MODEL_DIR). Sweep once per JVM per root: a child
-    * directory that looks like an artifact key (`kind-hexhash`) but has
-    * neither a `_GRAFT_COMPLETE` marker nor any `g-*` generation
-    * subdirectory cannot belong to the current layout — delete it.
-    * The delete requires POSITIVE old-layout evidence — a parquet
-    * `_SUCCESS` file in the entry or one level down — not merely the
-    * absence of current-layout structure: a second JVM mid-first-train
-    * (key dir created, first `g-*` not yet written) or a foreign
-    * directory that happens to match the key pattern in a shared model
-    * dir has neither marker nor generations, and keying the delete on
-    * that absence alone would destroy it. An interrupted current-layout
-    * write leaves `g-*` subdirectories, which the predicate spares (its
-    * generations are collected by the normal GC on the next successful
-    * commit). */
-  private def migrateLegacy(fs: FileSystem, rootPath: Path): Unit =
-    if (sweptRoots.add(rootPath.toString) && fs.exists(rootPath)) {
-      val keyLike = "^[a-z0-9]+-[0-9a-f]{8,}$".r
-      fs.listStatus(rootPath).foreach { st =>
-        if (st.isDirectory && keyLike.matches(st.getPath.getName) &&
-            !fs.exists(markerPath(st.getPath)) &&
-            !fs.listStatus(st.getPath).exists(c =>
-              c.isDirectory && c.getPath.getName.startsWith("g-")) &&
-            (fs.exists(new Path(st.getPath, "_SUCCESS")) ||
-              fs.listStatus(st.getPath).exists(c => c.isDirectory &&
-                fs.exists(new Path(c.getPath, "_SUCCESS")))))
-          fs.delete(st.getPath, true)
-      }
-    }
-
-  /** The generation path serving `fp` under stable key `p`, training it
-    * first when absent or stale. Single-relation artifacts write the
-    * parquet directly at the generation dir; multi-relation artifacts
-    * pass `write` a generation dir to fill with part subdirectories.
-    * Retries once if the corpus mutates mid-train (the current caller
-    * then gets an artifact of the NEW state instead of a stale one);
-    * after two failed attempts the freshest attempt serves — the marker
-    * stays uncommitted, so the next access retrains. */
-  private def ensureGen(s: SparkSession, p: Path, dir: String, table: String)
-      (write: Path => Unit): Path = {
+  /** The generation path serving the (dir, kind, params) artifact,
+    * training it first when absent or stale: `write` fills the generation
+    * dir it is passed (single-relation artifacts write the parquet there
+    * directly, multi-relation ones one part subdirectory each). An
+    * artifact serves iff its marker records the corpus's CURRENT
+    * fingerprint. Retries once if the corpus mutates mid-train (the
+    * current caller then gets an artifact of the NEW state instead of a
+    * stale one); after two failed attempts the freshest attempt serves —
+    * the marker stays uncommitted, so the next access retrains. */
+  private def ensureGen(s: SparkSession, dir: String, kind: String,
+      params: String, table: String)(write: Path => Unit): Path = {
     // LOCK-FREE serve path (r12 review): the marker protocol makes an
     // unlocked freshness check safe — the marker is written LAST, names
     // the serving generation, and GC always keeps that generation plus
     // the previous one — so the common case (a fresh artifact exists)
     // never waits behind another artifact's corpus-scale training under
-    // the global monitor. Training, the re-check that guards it, and the
-    // legacy sweep still serialize globally. Test roots stay safe: suites
-    // run sequentially in the forked test JVM, so a withRoot swap can
-    // never interleave with an unlocked read.
+    // the global monitor. Training and the re-check that guards it still
+    // serialize globally. Test roots stay safe: suites run sequentially
+    // in the forked test JVM, so a withRoot swap can never interleave
+    // with an unlocked read.
+    val p = new Path(root(s), key(dir, kind, params))
     val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val fp0 = fingerprint(s, dir, table)
+    val fp0 = tableFingerprint(s, dir, table)
     readMarker(fs, p) match {
       // Belt-and-braces with the rename-commit: serve lock-free only when
       // the named generation directory actually exists — a marker that
-      // names a collected or never-written generation (torn legacy marker,
-      // foreign tampering) falls through to the locked path, which
-      // re-checks under the monitor and retrains if needed.
+      // names a collected or never-written generation (foreign tampering)
+      // falls through to the locked path, which re-checks under the
+      // monitor and retrains if needed.
       case Some((mfp, gen)) if mfp == fp0 && fs.exists(new Path(p, gen)) =>
         new Path(p, gen)
-      case _ => ensureGenLocked(s, fs, p, dir, table)(write)
+      case _ => ensureGenLocked(s, fs, p, kind, dir, table)(write)
     }
   }
 
   private def ensureGenLocked(s: SparkSession, fs: FileSystem, p: Path,
-      dir: String, table: String)(write: Path => Unit): Path =
+      kind: String, dir: String, table: String)(write: Path => Unit): Path =
     synchronized {
-      migrateLegacy(fs, p.getParent)
-      var fp = fingerprint(s, dir, table)
+      var fp = tableFingerprint(s, dir, table)
       readMarker(fs, p) match {
         case Some((mfp, gen)) if mfp == fp && fs.exists(new Path(p, gen)) =>
           new Path(p, gen)
@@ -1598,9 +1350,10 @@ object AnnModels {
           while (!committed && attempts < 2) {
             attempts += 1
             gen = freshGenName(fs, p, fp)
+            buildCounts.merge(kind, 1, (a: Int, b: Int) => a + b)
             write(new Path(p, gen))
             committed = commitIfFresh(s, fs, p, fp, gen, dir, table)
-            if (!committed) fp = fingerprint(s, dir, table)
+            if (!committed) fp = tableFingerprint(s, dir, table)
           }
           if (committed)
             gcGenerations(fs, p, Set(gen) ++ prevGen)
@@ -1616,14 +1369,28 @@ object AnnModels {
   private def ensure(s: SparkSession, dir: String, kind: String, params: String,
       table: String = "documents", coalesce1: Boolean = true)
       (train: => DataFrame): DataFrame = {
-      val p = new Path(root(s), key(dir, kind, params))
-      val gen = ensureGen(s, p, dir, table) { genDir =>
-        // A model is a handful of rows; one file keeps the artifact tidy.
-        // Corpus-sized artifacts (the LSH index) keep their partitioning.
-        val out = train
-        (if (coalesce1) out.coalesce(1) else out)
-          .write.mode("overwrite").parquet(genDir.toString)
-      }
-      s.read.parquet(gen.toString)
+    val gen = ensureGen(s, dir, kind, params, table) { genDir =>
+      // A model is a handful of rows; one file keeps the artifact tidy.
+      // Corpus-sized artifacts (the LSH index) keep their partitioning.
+      val out = train
+      (if (coalesce1) out.coalesce(1) else out)
+        .write.mode("overwrite").parquet(genDir.toString)
     }
+    s.read.parquet(gen.toString)
+  }
+
+  /** [[ensure]] for a multi-relation artifact over the documents table:
+    * `write` fills one subdirectory per part of the generation dir, all
+    * gated by the one marker, so a partially-written set never serves.
+    * The parts are read back in `parts` order. */
+  private def ensureParts(s: SparkSession, dir: String, kind: String,
+      params: String, parts: Seq[String])(write: Path => Unit): Seq[DataFrame] = {
+    val gen = ensureGen(s, dir, kind, params, "documents")(write)
+    parts.map(part => s.read.parquet(partPath(gen, part)))
+  }
+
+  private def partPath(gen: Path, part: String): String = new Path(gen, part).toString
+
+  private def writePart(gen: Path, part: String, df: DataFrame): Unit =
+    df.write.mode("overwrite").parquet(partPath(gen, part))
 }

@@ -622,7 +622,7 @@ object Multimodal {
     * trainer (spec-pinned bit-identical to the served form). */
   private[graft] def textAlignInline(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.cosineSim
-    val pvec = array((0 until 64).map(j =>
+    val pvec = array((0 until AlignDims).map(j =>
       when(shiftright(col("phash"), j).bitwiseAND(lit(1L)) === lit(1L), lit(1.0d))
         .otherwise(lit(-1.0d))): _*)
     // the scored relation feeds the census count, bounds, census and flag
@@ -633,7 +633,7 @@ object Multimodal {
       .join(Tables.load(s, dir, "embeddings")
         .select(col("vec_id").as("doc_id"), col("embedding")), Seq("doc_id"))
       .select(col("doc_id"),
-        round(cosineSim(pvec, col("embedding")), 4).as("align4"))
+        round(cosineSim(pvec, col("embedding")), AlignDigits).as("align4"))
       .localCheckpoint()
     val thr = TextOps.calibratedThresholdOf(
       scored.select(col("doc_id"), col("align4").as("logit8")))
@@ -641,6 +641,11 @@ object Multimodal {
       .select(col("doc_id"), col("align4"),
         when(col("align4") >= col("thr"), 1).otherwise(0).as("align_keep"))
   }
+
+  /** The image direction's dimension (one per phash bit) and the
+    * alignment cosine's rounding in [[textAlignInline]]. */
+  val AlignDims = 64
+  val AlignDigits = 4
 
   /** Registry-served [[textAlignInline]] — see that chain's Scaladoc. */
   def textAlign(s: SparkSession, dir: String): DataFrame =

@@ -83,6 +83,11 @@ object Pipeline {
         sum(col("n_chars")).as("total_chars"))
   }
 
+  /** The held-out benchmark set is doc_id < [[BenchDocs]]; decontamination
+    * flags exact [[DecontamGram]]-gram overlap with it. */
+  val BenchDocs = 10
+  val DecontamGram = 5
+
   /** Benchmark decontamination: flag corpus docs (doc_id >= 10) sharing any
     * 5-gram with the held-out benchmark set (doc_id < 10) — the n-gram
     * overlap check every training pipeline runs before a data release.
@@ -101,10 +106,10 @@ object Pipeline {
     val d = graft.sources.Tables.load(s, dir, "documents")
     def grams(df: DataFrame) = df
       .select(col("doc_id"), explode(array_distinct(
-        ShingleExpressions.shingles(col("text"), 5))).as("g"))
-    val bench = grams(d.filter(col("doc_id") < 10))
+        ShingleExpressions.shingles(col("text"), DecontamGram))).as("g"))
+    val bench = grams(d.filter(col("doc_id") < BenchDocs))
       .select(col("doc_id").as("bench_id"), col("g"))
-    grams(d.filter(col("doc_id") >= 10)).as("c")
+    grams(d.filter(col("doc_id") >= BenchDocs)).as("c")
       .join(broadcast(bench), Seq("g"))
       .groupBy(col("doc_id"))
       .agg(countDistinct(col("g")).as("n_shared_grams"),
@@ -292,8 +297,8 @@ object Pipeline {
   def decontaminateFuzzy(s: SparkSession, dir: String): DataFrame = {
     val d = graft.sources.Tables.load(s, dir, "documents")
     Dedup.incrementalLshMatch(
-      d.filter(col("doc_id") >= 10),
-      Dedup.lshIndexOf(d.filter(col("doc_id") < 10)))
+      d.filter(col("doc_id") >= BenchDocs),
+      Dedup.lshIndexOf(d.filter(col("doc_id") < BenchDocs)))
   }
 
   /** Context-window packing planner (concat-and-chunk): documents are laid
@@ -1097,7 +1102,7 @@ object Pipeline {
     val canon = Dedup.survivors(s, dir).select(col("doc_id"))
     val dirty = decontaminate(s, dir).select(col("doc_id"))
     docTokens(s, dir)
-      .filter(col("doc_id") >= 10)
+      .filter(col("doc_id") >= BenchDocs)
       .join(gopher, Seq("doc_id"), "left_semi")
       .join(model, Seq("doc_id"), "left_semi")
       .join(canon, Seq("doc_id"), "left_semi")

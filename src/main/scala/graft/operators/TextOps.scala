@@ -206,6 +206,15 @@ object TextOps {
     // load-bearing: the pack manifests count exactly these rows.
     qualityOf(docs(s, dir), withSource = true)
 
+  /** The heuristic quality composite: exact-decimal weights of the
+    * stopword, non-repetition and punctuation features plus a bias, over
+    * features rounded to [[QualityDigits]] places. */
+  val QualityWStop = BigDecimal("0.5")
+  val QualityWRep = BigDecimal("0.3")
+  val QualityWPunct = BigDecimal("0.2")
+  val QualityBias = BigDecimal("0.2")
+  val QualityDigits = 4
+
   private[graft] def qualityOf(d: DataFrame, withSource: Boolean = false): DataFrame = {
     val toks = wsTokens(col("text"))
     val nTok = size(toks).cast("double")
@@ -218,17 +227,18 @@ object TextOps {
     // Composite score in exact DECIMAL: a double-weighted sum of rounded
     // doubles lands on .00005 half-way points where Spark and the oracle
     // round differently; decimal math sidesteps the boundary entirely.
-    def d4(c: Column): Column = round(c, 4).cast("decimal(8,4)")
-    val score = (d4(stop) * lit(BigDecimal("0.5")) +
-      (lit(BigDecimal("1")) - d4(rep)) * lit(BigDecimal("0.3")) -
-      d4(punct) * lit(BigDecimal("0.2")) + lit(BigDecimal("0.2"))).cast("double")
+    def fixed(c: Column): Column =
+      round(c, QualityDigits).cast(s"decimal(8,$QualityDigits)")
+    val score = (fixed(stop) * lit(QualityWStop) +
+      (lit(BigDecimal("1")) - fixed(rep)) * lit(QualityWRep) -
+      fixed(punct) * lit(QualityWPunct) + lit(QualityBias)).cast("double")
     val cols = Seq(
       col("doc_id"),
       size(toks).as("n_tokens"),
-      round(avgLen, 4).as("avg_token_len"),
-      round(punct, 4).as("punct_ratio"),
-      round(stop, 4).as("stopword_ratio"),
-      round(rep, 4).as("repetition_ratio"),
+      round(avgLen, QualityDigits).as("avg_token_len"),
+      round(punct, QualityDigits).as("punct_ratio"),
+      round(stop, QualityDigits).as("stopword_ratio"),
+      round(rep, QualityDigits).as("repetition_ratio"),
       score.as("quality_score"))
     d.select((if (withSource) cols :+ col("source") else cols): _*)
   }
@@ -1715,7 +1725,7 @@ object TextOps {
     // (HOF-heavy) and interpreted eval gets no common-subexpression
     // elimination, so "one scan" measured 2x SLOWER end-to-end than the
     // three smaller projections (7.1-8.9 s vs 3.7 s for the calibrated
-    // gate at sf0.1 — profiled, not guessed; tools/ProfileQuality). The
+    // gate at sf0.1 — profiled, not guessed). The
     // stream transform keeps logitBaseCol where a single per-row column
     // is structurally required, with the per-doc parity spec pinning the
     // two formulations equal.
@@ -1924,7 +1934,7 @@ object TextOps {
     * grid-quantized sigmoid per (doc, round), truncating-DIV updates
     * (spec: identical (mu, w) on both corpora).
     *
-    * MEASURED at ×100 (500k docs, ProfileLrCost): 17.1 s vs the loop's
+    * MEASURED at ×100 (500k docs): 17.1 s vs the loop's
     * 9.4 s — the driver round-trip was never the bottleneck (1 row per
     * round), while attaching the broadcast state row costs a
     * BroadcastNestedLoopJoin PER TRAINING ROW per round and breaks the

@@ -16,6 +16,10 @@ class AnnModelsSpec extends SparkSpec {
   private def rows(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).toSeq.sorted
 
+  // the hamming artifacts are keyed per hash family (sim/ph/au)
+  private def hammingBuilds(prefix: String): Int =
+    Seq("sim", "ph", "au").map(f => AnnModels.builds(prefix + f)).sum
+
   private def freshRoot(tag: String): String = {
     val d = java.nio.file.Files.createTempDirectory(s"graft-annmodels-$tag")
     d.toFile.deleteOnExit()
@@ -24,11 +28,11 @@ class AnnModelsSpec extends SparkSpec {
 
   test("IVF centroids train exactly once per dataset; the artifact serves all later reads") {
     AnnModels.withRoot(freshRoot("ivf")) {
-      val t0 = AnnModels.ivfTrains
+      val t0 = AnnModels.builds("ivf")
       val first = rows(AnnModels.ivfCentroids(spark, sf))
-      assert(AnnModels.ivfTrains == t0 + 1, "first access must train")
+      assert(AnnModels.builds("ivf") == t0 + 1, "first access must train")
       val second = AnnModels.ivfCentroids(spark, sf)
-      assert(AnnModels.ivfTrains == t0 + 1, "second access must serve the artifact, not retrain")
+      assert(AnnModels.builds("ivf") == t0 + 1, "second access must serve the artifact, not retrain")
       assert(second.inputFiles.nonEmpty &&
         second.inputFiles.forall(_.contains("graft-annmodels-ivf")),
         s"artifact read must scan the model store, got ${second.inputFiles.mkString(",")}")
@@ -50,27 +54,27 @@ class AnnModelsSpec extends SparkSpec {
 
   test("all five model consumers share one IVF training pass and one PQ training pass") {
     AnnModels.withRoot(freshRoot("share")) {
-      val (i0, p0) = (AnnModels.ivfTrains, AnnModels.pqTrains)
+      val (i0, p0) = (AnnModels.builds("ivf"), AnnModels.builds("pq"))
       Similarity.annIvf(spark, sf).collect()
       Similarity.annPq(spark, sf).collect()
       Similarity.annIvfPq(spark, sf).collect()
       Dedup.semanticDedup(spark, sf).collect()
       Dedup.semanticDedupKeep(spark, sf).collect()
-      assert(AnnModels.ivfTrains == i0 + 1,
-        s"expected ONE IVF training pass across consumers, got ${AnnModels.ivfTrains - i0}")
-      assert(AnnModels.pqTrains == p0 + 1,
-        s"expected ONE PQ training pass across consumers, got ${AnnModels.pqTrains - p0}")
+      assert(AnnModels.builds("ivf") == i0 + 1,
+        s"expected ONE IVF training pass across consumers, got ${AnnModels.builds("ivf") - i0}")
+      assert(AnnModels.builds("pq") == p0 + 1,
+        s"expected ONE PQ training pass across consumers, got ${AnnModels.builds("pq") - p0}")
     }
   }
 
   test("trigram LM trains once per dataset and artifact scores are bit-identical") {
     AnnModels.withRoot(freshRoot("lm")) {
-      val t0 = AnnModels.lmTrains
+      val t0 = AnnModels.builds("lm")
       val first = rows(graft.operators.TextOps.perplexity(spark, sf))
-      assert(AnnModels.lmTrains == t0 + 1, "first access must train the LM")
+      assert(AnnModels.builds("lm") == t0 + 1, "first access must train the LM")
       // artifact-served run: no retraining, identical scores
       val second = rows(graft.operators.TextOps.perplexity(spark, sf))
-      assert(AnnModels.lmTrains == t0 + 1, "second access must serve the artifact")
+      assert(AnnModels.builds("lm") == t0 + 1, "second access must serve the artifact")
       assert(second == first, "artifact round-trip changed perplexity scores")
       // inline training (the df-based spec path) agrees exactly
       val inline = rows(graft.operators.TextOps.perplexityOf(
@@ -79,18 +83,18 @@ class AnnModelsSpec extends SparkSpec {
       // the downstream model consumers share the one trained LM
       graft.operators.TextOps.qualityModel(spark, sf).collect()
       graft.operators.Pipeline.curateModel(spark, sf).collect()
-      assert(AnnModels.lmTrains == t0 + 1,
-        s"LM consumers retrained: ${AnnModels.lmTrains - t0} passes")
+      assert(AnnModels.builds("lm") == t0 + 1,
+        s"LM consumers retrained: ${AnnModels.builds("lm") - t0} passes")
     }
   }
 
   test("langid centroids train once; artifact-served scoring is bit-identical to inline") {
     AnnModels.withRoot(freshRoot("langid")) {
-      val t0 = AnnModels.langidTrains
+      val t0 = AnnModels.builds("langid")
       val first = rows(graft.operators.TextOps.langidModel(spark, sf))
-      assert(AnnModels.langidTrains == t0 + 1, "first access must train the centroids")
+      assert(AnnModels.builds("langid") == t0 + 1, "first access must train the centroids")
       val second = rows(graft.operators.TextOps.langidModel(spark, sf))
-      assert(AnnModels.langidTrains == t0 + 1, "second access must serve the artifact")
+      assert(AnnModels.builds("langid") == t0 + 1, "second access must serve the artifact")
       assert(second == first, "artifact round-trip changed predictions")
       val inline = rows(graft.operators.TextOps.langidModelOf(
         graft.sources.Tables.load(spark, sf, "documents")))
@@ -100,11 +104,11 @@ class AnnModelsSpec extends SparkSpec {
 
   test("BPE merge table trains once; the trained table drives the encoder chain") {
     AnnModels.withRoot(freshRoot("bpe")) {
-      val t0 = AnnModels.bpeTrains
+      val t0 = AnnModels.builds("bpe")
       val first = rows(graft.operators.TextOps.bpeTrainedIds(spark, sf))
-      assert(AnnModels.bpeTrains == t0 + 1, "first access must train the merge table")
+      assert(AnnModels.builds("bpe") == t0 + 1, "first access must train the merge table")
       val second = rows(graft.operators.TextOps.bpeTrainedIds(spark, sf))
-      assert(AnnModels.bpeTrains == t0 + 1, "second access must serve the artifact")
+      assert(AnnModels.builds("bpe") == t0 + 1, "second access must serve the artifact")
       assert(second == first, "artifact round-trip changed the id stream")
       assert(rows(AnnModels.bpeMergeTable(spark, sf)) ==
         rows(graft.operators.TextOps.bpeTrain(spark, sf)),
@@ -117,11 +121,11 @@ class AnnModelsSpec extends SparkSpec {
 
   test("quality centroids train once; the trained gate splits the corpus") {
     AnnModels.withRoot(freshRoot("qual")) {
-      val t0 = AnnModels.qualityTrains
+      val t0 = AnnModels.builds("qualcent")
       val first = rows(graft.operators.TextOps.qualityTrained(spark, sf))
-      assert(AnnModels.qualityTrains == t0 + 1, "first access must train the centroids")
+      assert(AnnModels.builds("qualcent") == t0 + 1, "first access must train the centroids")
       val second = rows(graft.operators.TextOps.qualityTrained(spark, sf))
-      assert(AnnModels.qualityTrains == t0 + 1, "second access must serve the artifact")
+      assert(AnnModels.builds("qualcent") == t0 + 1, "second access must serve the artifact")
       assert(second == first, "artifact round-trip changed the gate")
       // non-degenerate on the shipped corpus: the learned hyperplane keeps
       // some and drops some (the >=6-of-7 seed split generalizes)
@@ -172,11 +176,11 @@ class AnnModelsSpec extends SparkSpec {
         (1L, "srcA", shared),
         (2L, "srcA", "unrelated corpus filler content nine ten eleven twelve"),
         (10L, "src0", shared)))
-      val b0 = AnnModels.lshIndexBuilds
+      val b0 = AnnModels.builds("lshidx")
       val first = graft.streaming.EventStreams.incrementalVsIndex(spark, dir)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
       assert(first == Set((10L, 1L, 0)), s"probe matches the one corpus copy: $first")
-      assert(AnnModels.lshIndexBuilds == b0 + 1)
+      assert(AnnModels.builds("lshidx") == b0 + 1)
       // MUTATE the corpus IN PLACE at the same path: add corpus doc 5 with
       // the shared text. Without the freshness fingerprint the persisted
       // index still exists for this (dir, params) key and doc 5 would be
@@ -188,7 +192,7 @@ class AnnModelsSpec extends SparkSpec {
         (10L, "src0", shared)))
       val second = graft.streaming.EventStreams.incrementalVsIndex(spark, dir)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-      assert(AnnModels.lshIndexBuilds == b0 + 2,
+      assert(AnnModels.builds("lshidx") == b0 + 2,
         "in-place mutation must retrain the index")
       assert(second == Set((10L, 2L, 0)),
         s"retrained index must surface the backfilled corpus doc: $second")
@@ -217,17 +221,17 @@ class AnnModelsSpec extends SparkSpec {
         (1L, "srcA", shared),
         (2L, "srcA", "unrelated corpus asset content nine ten eleven twelve"),
         (10L, "src0", shared)))
-      val b0 = AnnModels.phashIndexBuilds
+      val b0 = AnnModels.builds("phidx")
       val first = graft.streaming.EventStreams.phashVsIndex(spark, dir)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
       assert(first == Set((10L, 1L, 0)), s"probe matches the one corpus copy: $first")
-      assert(AnnModels.phashIndexBuilds == b0 + 1)
+      assert(AnnModels.builds("phidx") == b0 + 1)
       // artifact-served form == the in-query form, and serving never retrains
       val inQuery = graft.operators.Multimodal.phashIncremental(spark, dir)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
       assert(inQuery == first, "artifact-served probe diverged from the in-query form")
       graft.streaming.EventStreams.phashVsIndex(spark, dir).collect()
-      assert(AnnModels.phashIndexBuilds == b0 + 1, "second probe must serve the artifact")
+      assert(AnnModels.builds("phidx") == b0 + 1, "second probe must serve the artifact")
       // in-place corpus backfill: a second copy of the shared payload must
       // retrain the index and surface in the next probe
       writeDocs(Seq(
@@ -237,7 +241,7 @@ class AnnModelsSpec extends SparkSpec {
         (10L, "src0", shared)))
       val second = graft.streaming.EventStreams.phashVsIndex(spark, dir)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-      assert(AnnModels.phashIndexBuilds == b0 + 2,
+      assert(AnnModels.builds("phidx") == b0 + 2,
         "in-place mutation must retrain the index")
       assert(second == Set((10L, 2L, 0)),
         s"retrained index must surface the backfilled corpus asset: $second")
@@ -246,12 +250,12 @@ class AnnModelsSpec extends SparkSpec {
 
   test("phash labels artifact: one CC run serves both phash dedup and keep-best-copy") {
     AnnModels.withRoot(freshRoot("phlab")) {
-      val b0 = AnnModels.phashLabelBuilds
+      val b0 = AnnModels.builds("phlab")
       val dedup = graft.operators.Multimodal.phashDedup(spark, sf).collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(AnnModels.phashLabelBuilds == b0 + 1, "first consumer must build the labeling")
+      assert(AnnModels.builds("phlab") == b0 + 1, "first consumer must build the labeling")
       graft.operators.Multimodal.phashKeep(spark, sf).collect()
-      assert(AnnModels.phashLabelBuilds == b0 + 1,
+      assert(AnnModels.builds("phlab") == b0 + 1,
         "the second consumer must serve the same artifact")
       // served labels are bit-identical to the inline CC run
       val inline = graft.operators.Multimodal.phashLabelsOf(spark, sf).collect()
@@ -267,35 +271,35 @@ class AnnModelsSpec extends SparkSpec {
   test("quality logits and trained margins: registry-served, bit-identical to inline") {
     val T = graft.operators.TextOps
     AnnModels.withRoot(freshRoot("qlog")) {
-      val a0 = AnnModels.qualityLogitTrains
+      val a0 = AnnModels.builds("qlog")
       val served = rows(T.qualityModel(spark, sf))
-      assert(AnnModels.qualityLogitTrains == a0 + 1, "first consumer must score the corpus")
+      assert(AnnModels.builds("qlog") == a0 + 1, "first consumer must score the corpus")
       assert(served == rows(T.qualityModelInline(spark, sf)),
         "artifact-served logits diverged from the inline scoring chain")
       T.qualityCalibrated(spark, sf).collect()
       graft.operators.Pipeline.curateModel(spark, sf).collect()
-      assert(AnnModels.qualityLogitTrains == a0 + 1,
+      assert(AnnModels.builds("qlog") == a0 + 1,
         "calibrated gate and curation must serve the one scored relation")
-      val b0 = AnnModels.trainedMarginTrains
+      val b0 = AnnModels.builds("qtm")
       val servedT = rows(T.qualityTrained(spark, sf))
-      assert(AnnModels.trainedMarginTrains == b0 + 1)
+      assert(AnnModels.builds("qtm") == b0 + 1)
       assert(servedT == rows(T.qualityTrainedInline(spark, sf)),
         "artifact-served margins diverged from the inline trained chain")
       graft.operators.Pipeline.buildTrained(spark, sf).collect()
-      assert(AnnModels.trainedMarginTrains == b0 + 1,
+      assert(AnnModels.builds("qtm") == b0 + 1,
         "the build capstone must serve the trained relation")
     }
   }
 
   test("shingle-pair store: one posting-list expansion serves all four verifiers") {
     AnnModels.withRoot(freshRoot("shpairs")) {
-      val b0 = AnnModels.shinglePairBuilds
+      val b0 = AnnModels.builds("shpairs")
       val jac = rows(Dedup.ngramJaccard(spark, sf))
-      assert(AnnModels.shinglePairBuilds == b0 + 1, "first consumer must build the store")
+      assert(AnnModels.builds("shpairs") == b0 + 1, "first consumer must build the store")
       Dedup.containment(spark, sf).collect()
       Dedup.lshRecall(spark, sf).collect()
       Dedup.lshRecallBanded(spark, sf).collect()
-      assert(AnnModels.shinglePairBuilds == b0 + 1,
+      assert(AnnModels.builds("shpairs") == b0 + 1,
         "all verifiers must serve the one pair store")
       // served pairs are bit-identical to the inline expansion
       assert(rows(AnnModels.shinglePairs(spark, sf)) ==
@@ -307,15 +311,15 @@ class AnnModelsSpec extends SparkSpec {
 
   test("verified pairs: one candidate+verify chain serves the gated query, the overlap matrix and the CC trainer") {
     AnnModels.withRoot(freshRoot("vpairs")) {
-      val v0 = AnnModels.verifiedPairBuilds
+      val v0 = AnnModels.builds("vpairs")
       val served = rows(Dedup.minhashVerified(spark, sf))
-      assert(AnnModels.verifiedPairBuilds == v0 + 1, "first consumer must run the chain")
+      assert(AnnModels.builds("vpairs") == v0 + 1, "first consumer must run the chain")
       assert(served == rows(Dedup.minhashVerifiedInline(spark, sf)),
         "artifact-served verified pairs diverged from the inline chain")
       assert(served.nonEmpty, "construction check: the corpus has verified pairs")
       Dedup.sourceOverlap(spark, sf).collect()
       Dedup.survivors(spark, sf).collect()
-      assert(AnnModels.verifiedPairBuilds == v0 + 1,
+      assert(AnnModels.builds("vpairs") == v0 + 1,
         "the overlap matrix and the survivor trainer must serve the one pair relation")
     }
   }
@@ -323,15 +327,15 @@ class AnnModelsSpec extends SparkSpec {
   test("perplexity scores: one scoring pass serves the bucket, curriculum and gate consumers") {
     val T = graft.operators.TextOps
     AnnModels.withRoot(freshRoot("ppl")) {
-      val p0 = AnnModels.pplScoreTrains
+      val p0 = AnnModels.builds("ppl")
       val served = rows(T.perplexity(spark, sf))
-      assert(AnnModels.pplScoreTrains == p0 + 1, "first consumer must score the corpus")
+      assert(AnnModels.builds("ppl") == p0 + 1, "first consumer must score the corpus")
       assert(served == rows(T.perplexityInline(spark, sf)),
         "artifact-served scores diverged from the inline scoring pass")
       T.perplexityBucket(spark, sf).collect()
       graft.operators.Pipeline.curriculum(spark, sf).collect()
       T.qualityModel(spark, sf).collect()
-      assert(AnnModels.pplScoreTrains == p0 + 1,
+      assert(AnnModels.builds("ppl") == p0 + 1,
         "bucket, curriculum and quality consumers must serve the one scored relation")
     }
   }
@@ -353,11 +357,11 @@ class AnnModelsSpec extends SparkSpec {
       .toDF("doc_id", "source", "text")
       .write.partitionBy("source").mode("overwrite").parquet(table)
     AnnModels.withRoot(freshRoot("nested")) {
-      val b0 = AnnModels.lshIndexBuilds
+      val b0 = AnnModels.builds("lshidx")
       val first = graft.streaming.EventStreams.incrementalVsIndex(spark, dir)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
       assert(first == Set((10L, 0L, 1)), s"no corpus copy of the probe text yet: $first")
-      assert(AnnModels.lshIndexBuilds == b0 + 1)
+      assert(AnnModels.builds("lshidx") == b0 + 1)
       // mutate ONE nested partition in place: a leaf file with a copy of
       // the shared text lands under source=srcA/ WITHOUT any top-level
       // file changing (the directory entry itself is not a file, so the
@@ -372,7 +376,7 @@ class AnnModelsSpec extends SparkSpec {
         java.nio.file.Paths.get(table, "source=srcA", "part-backfill.parquet"))
       val second = graft.streaming.EventStreams.incrementalVsIndex(spark, dir)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-      assert(AnnModels.lshIndexBuilds == b0 + 2,
+      assert(AnnModels.builds("lshidx") == b0 + 2,
         "a nested partition rewrite must invalidate the persisted index")
       assert(second == Set((10L, 1L, 0)),
         s"retrained index must surface the rewritten partition's doc: $second")
@@ -441,9 +445,9 @@ class AnnModelsSpec extends SparkSpec {
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val root = freshRoot("marker")
     AnnModels.withRoot(root) {
-      val t0 = AnnModels.ingestGateTrains
+      val t0 = AnnModels.builds("ig")
       val first = rows(graft.streaming.EventStreams.ingestGateBatch(spark, dir))
-      assert(AnnModels.ingestGateTrains == t0 + 1)
+      assert(AnnModels.builds("ig") == t0 + 1)
       // simulate a crash after the relations were written but before the
       // completion marker: a partially-committed artifact must retrain,
       // never serve (the mixed-state guard — ADVICE r10 atomicity)
@@ -452,7 +456,7 @@ class AnnModelsSpec extends SparkSpec {
       assert(marker.exists(), "training must leave a completion marker")
       assert(marker.delete())
       val second = rows(graft.streaming.EventStreams.ingestGateBatch(spark, dir))
-      assert(AnnModels.ingestGateTrains == t0 + 2,
+      assert(AnnModels.builds("ig") == t0 + 2,
         "an unmarked artifact must retrain, not serve")
       assert(second == first)
       // and the four relations live under ONE marker-gated generation dir
@@ -466,24 +470,24 @@ class AnnModelsSpec extends SparkSpec {
 
   test("survivor labeling trains once; all curation consumers serve the artifact") {
     AnnModels.withRoot(freshRoot("cclab")) {
-      val b0 = AnnModels.survivorBuilds
+      val b0 = AnnModels.builds("cclab")
       val first = rows(Dedup.survivors(spark, sf))
-      assert(AnnModels.survivorBuilds == b0 + 1, "first access must run the CC chain")
+      assert(AnnModels.builds("cclab") == b0 + 1, "first access must run the CC chain")
       // every other consumer of the canonical set serves the artifact
       graft.operators.Pipeline.curateNearDup(spark, sf).collect()
       graft.operators.Pipeline.build(spark, sf).collect()
       val second = rows(Dedup.survivors(spark, sf))
-      assert(AnnModels.survivorBuilds == b0 + 1,
-        s"curation consumers re-ran CC: ${AnnModels.survivorBuilds - b0} passes")
+      assert(AnnModels.builds("cclab") == b0 + 1,
+        s"curation consumers re-ran CC: ${AnnModels.builds("cclab") - b0} passes")
       assert(second == first, "artifact round-trip changed the survivor set")
     }
   }
 
   test("DSIR model trains once; artifact-served selection is bit-identical to the inline fit") {
     AnnModels.withRoot(freshRoot("dsir")) {
-      val t0 = AnnModels.dsirTrains
+      val t0 = AnnModels.builds("dsir")
       val served = rows(graft.operators.TextOps.importanceDsir(spark, sf))
-      assert(AnnModels.dsirTrains == t0 + 1, "first access must train")
+      assert(AnnModels.builds("dsir") == t0 + 1, "first access must train")
       // DECIMAL(18,6) log-ratios and long thresholds parquet round-trip
       // exactly, so the artifact-served chain must reproduce the inline
       // fit bit for bit — the property that lets the oracle replay
@@ -492,7 +496,7 @@ class AnnModelsSpec extends SparkSpec {
         graft.sources.Tables.load(spark, sf, "documents")))
       assert(served == inline, "artifact-served selection diverged from the inline fit")
       graft.operators.TextOps.importanceDsir(spark, sf).collect()
-      assert(AnnModels.dsirTrains == t0 + 1,
+      assert(AnnModels.builds("dsir") == t0 + 1,
         "second access must serve the artifact, not retrain")
     }
   }
@@ -501,22 +505,22 @@ class AnnModelsSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     AnnModels.withRoot(freshRoot("dsir8k")) {
       val T = graft.operators.TextOps
-      val t0 = AnnModels.dsirTrains
+      val t0 = AnnModels.builds("dsir")
       val wide = T.importanceDsir8k(spark, sf)
       val wideRows = rows(wide)
-      assert(AnnModels.dsirTrains == t0 + 1, "first 8k access must train")
+      assert(AnnModels.builds("dsir") == t0 + 1, "first 8k access must train")
       // bit-identical to the inline fit at the same width (the oracle
       // replays the full train, so this is what keeps the gate meaningful)
       val inline = rows(T.importanceDsirOf(
         graft.sources.Tables.load(spark, sf, "documents"), T.DsirBuckets8k))
       assert(wideRows == inline, "8k artifact-served selection diverged from inline fit")
       T.importanceDsir8k(spark, sf).collect()
-      assert(AnnModels.dsirTrains == t0 + 1, "second access must serve the artifact")
+      assert(AnnModels.builds("dsir") == t0 + 1, "second access must serve the artifact")
       // the 256-bucket model lives under a DIFFERENT key: training it is a
       // separate pass and the two widths coexist in one store
       val narrow = T.importanceDsir(spark, sf)
       narrow.collect()
-      assert(AnnModels.dsirTrains == t0 + 2, "the two widths must not share a key")
+      assert(AnnModels.builds("dsir") == t0 + 2, "the two widths must not share a key")
       // realistic width must never REGRESS seed enrichment on the shipped
       // corpus (measured: the shipped vocabulary does not alias at 256
       // buckets, so the two selections coincide exactly — the strict
@@ -638,7 +642,7 @@ class AnnModelsSpec extends SparkSpec {
       writeDocs(stateB, 2000000000000L)
       AnnModels.lshIndex(spark, dir).collect()
       // REVERT: byte-identical state A at the original mtime — same
-      // fingerprint, so genName(fp) collides with the already-served genA.
+      // fingerprint, so its generation name collides with the already-served genA.
       writeDocs(stateA, 1000000000000L)
       val reverted = AnnModels.lshIndex(spark, dir)
       assert(rows(reverted) == firstRows, "reverted corpus must serve state-A content")
@@ -651,37 +655,14 @@ class AnnModelsSpec extends SparkSpec {
     }
   }
 
-  test("legacy pre-generational store entries are swept on first access") {
-    val root = freshRoot("sweep")
-    // a pre-r11 artifact: fingerprint-keyed dir gated by parquet _SUCCESS,
-    // no _GRAFT_COMPLETE marker, no g-* generations — permanently orphaned
-    // under the generational layout (ADVICE r11: retained garbage)
-    val legacy = new java.io.File(root, "lm-0123456789abcdef")
-    assert(legacy.mkdirs())
-    java.nio.file.Files.write(new java.io.File(legacy, "_SUCCESS").toPath, Array[Byte]())
-    java.nio.file.Files.write(new java.io.File(legacy, "part-00000.parquet").toPath,
-      "stale".getBytes("UTF-8"))
-    // a non-artifact directory must be left alone (defensive: the sweep
-    // only touches names shaped like artifact keys)
-    val bystander = new java.io.File(root, "user-notes")
-    assert(bystander.mkdirs())
-    AnnModels.withRoot(root) {
-      AnnModels.ivfCentroids(spark, sf).collect()
-      assert(!legacy.exists(), "legacy _SUCCESS-gated entry must be swept")
-      assert(bystander.exists(), "non-key-shaped directories must survive the sweep")
-      // the freshly-trained current-layout artifact must of course survive
-      assert(new java.io.File(root).listFiles().exists(_.getName.startsWith("ivf-")))
-    }
-  }
-
   test("logistic margins: registry-served, bit-identical to inline, one " +
       "fit across the gate and build consumers") {
     AnnModels.withRoot(freshRoot("qlr")) {
-      val t0 = AnnModels.lrMarginTrains
+      val t0 = AnnModels.builds("qlr")
       val served = rows(graft.operators.TextOps.qualityLr(spark, sf))
-      assert(AnnModels.lrMarginTrains == t0 + 1, "first access must fit")
+      assert(AnnModels.builds("qlr") == t0 + 1, "first access must fit")
       graft.SparkEntry.queries("pipeline_build_lr")(spark, sf).collect()
-      assert(AnnModels.lrMarginTrains == t0 + 1,
+      assert(AnnModels.builds("qlr") == t0 + 1,
         "the build consumer must serve the artifact, not refit")
       assert(served == rows(graft.operators.TextOps.qualityLrInline(spark, sf)),
         "served logistic margins diverge from inline")
@@ -691,16 +672,16 @@ class AnnModelsSpec extends SparkSpec {
   test("ivf assignment and semantic labels: registry-served, bit-identical " +
       "to inline, one training pass across all consumers") {
     AnnModels.withRoot(freshRoot("semserve")) {
-      val (a0, l0) = (AnnModels.ivfAssignTrains, AnnModels.semanticLabelTrains)
+      val (a0, l0) = (AnnModels.builds("ivfasn"), AnnModels.builds("semlab"))
       // consumers: the dedup pair, both narrow assignment readers, a sampler
       Dedup.semanticDedup(spark, sf).collect()
       Dedup.semanticDedupKeep(spark, sf).collect()
       Similarity.prototypePrune(spark, sf).collect()
       Similarity.annIvf(spark, sf).collect()
-      assert(AnnModels.ivfAssignTrains == a0 + 1,
-        s"expected ONE assignment pass, got ${AnnModels.ivfAssignTrains - a0}")
-      assert(AnnModels.semanticLabelTrains == l0 + 1,
-        s"expected ONE semantic labeling, got ${AnnModels.semanticLabelTrains - l0}")
+      assert(AnnModels.builds("ivfasn") == a0 + 1,
+        s"expected ONE assignment pass, got ${AnnModels.builds("ivfasn") - a0}")
+      assert(AnnModels.builds("semlab") == l0 + 1,
+        s"expected ONE semantic labeling, got ${AnnModels.builds("semlab") - l0}")
       assert(rows(AnnModels.ivfAssign(spark, sf)) ==
         rows(Similarity.ivfAssignInline(spark, sf)),
         "served assignment diverges from inline")
@@ -713,11 +694,11 @@ class AnnModelsSpec extends SparkSpec {
   test("hashed-ngram gate margins: registry-served, bit-identical to " +
       "inline, one fit per corpus state") {
     AnnModels.withRoot(freshRoot("ftserve")) {
-      val t0 = AnnModels.ftMarginTrains
+      val t0 = AnnModels.builds("qft")
       val served = rows(graft.operators.TextOps.qualityFt(spark, sf))
-      assert(AnnModels.ftMarginTrains == t0 + 1, "first access must fit")
+      assert(AnnModels.builds("qft") == t0 + 1, "first access must fit")
       assert(rows(graft.operators.TextOps.qualityFt(spark, sf)) == served)
-      assert(AnnModels.ftMarginTrains == t0 + 1,
+      assert(AnnModels.builds("qft") == t0 + 1,
         "second access must serve the artifact, not refit")
       assert(served == rows(graft.operators.TextOps.qualityFtInline(spark, sf)),
         "served hashed-ngram margins diverge from inline")
@@ -727,7 +708,7 @@ class AnnModelsSpec extends SparkSpec {
   test("hamming pairs + degenerate census: registry-served, bit-identical " +
       "to inline, ONE build per hash family across all consumers") {
     AnnModels.withRoot(freshRoot("hamserve")) {
-      val (p0, d0) = (AnnModels.hammingPairTrains, AnnModels.hammingDegenTrains)
+      val (p0, d0) = (hammingBuilds("hp"), hammingBuilds("dg"))
       // the three gated pairing queries + the CC-label consumers that
       // must ride the SAME served pair artifacts
       graft.operators.Dedup.simhashPairs(spark, sf).collect()
@@ -735,10 +716,10 @@ class AnnModelsSpec extends SparkSpec {
       graft.operators.Multimodal.audioPairs(spark, sf).collect()
       graft.operators.Multimodal.audioDedup(spark, sf).collect()
       graft.operators.Multimodal.phashDedup(spark, sf).collect()
-      assert(AnnModels.hammingPairTrains == p0 + 3,
-        s"expected ONE pair build per hash family (sim/ph/au), got ${AnnModels.hammingPairTrains - p0}")
-      assert(AnnModels.hammingDegenTrains == d0 + 3,
-        s"expected ONE degenerate census per hash family, got ${AnnModels.hammingDegenTrains - d0}")
+      assert(hammingBuilds("hp") == p0 + 3,
+        s"expected ONE pair build per hash family (sim/ph/au), got ${hammingBuilds("hp") - p0}")
+      assert(hammingBuilds("dg") == d0 + 3,
+        s"expected ONE degenerate census per hash family, got ${hammingBuilds("dg") - d0}")
       assert(rows(graft.operators.Dedup.simhashPairs(spark, sf)) ==
         rows(graft.operators.Dedup.simhashPairsInline(spark, sf)),
         "served simhash pairs diverge from inline")
@@ -748,7 +729,7 @@ class AnnModelsSpec extends SparkSpec {
       assert(rows(graft.operators.Multimodal.phashPairs(spark, sf)) ==
         rows(graft.operators.Multimodal.phashPairsInline(spark, sf)),
         "served phash pairs diverge from inline")
-      assert(AnnModels.hammingPairTrains == p0 + 3,
+      assert(hammingBuilds("hp") == p0 + 3,
         "re-reading the artifacts must not rebuild the pair relations")
     }
   }
@@ -756,17 +737,17 @@ class AnnModelsSpec extends SparkSpec {
   test("PQ corpus codes: registry-served, bit-identical to inline, ONE " +
       "encoding pass across the whole PQ family") {
     AnnModels.withRoot(freshRoot("pqcodes")) {
-      val c0 = AnnModels.pqCodeTrains
+      val c0 = AnnModels.builds("pqcodes")
       // all three PQ-family consumers: compressed scan, IVFADC, rerank
       Similarity.annPq(spark, sf).collect()
       Similarity.annIvfPq(spark, sf).collect()
       Similarity.annIvfPqRerank(spark, sf).collect()
-      assert(AnnModels.pqCodeTrains == c0 + 1,
-        s"expected ONE corpus encoding pass, got ${AnnModels.pqCodeTrains - c0}")
+      assert(AnnModels.builds("pqcodes") == c0 + 1,
+        s"expected ONE corpus encoding pass, got ${AnnModels.builds("pqcodes") - c0}")
       assert(rows(AnnModels.pqCodes(spark, sf)) ==
         rows(Similarity.pqCodesInline(spark, sf)),
         "served PQ codes diverge from inline encoding")
-      assert(AnnModels.pqCodeTrains == c0 + 1,
+      assert(AnnModels.builds("pqcodes") == c0 + 1,
         "re-reading the artifact must not re-encode")
     }
   }
@@ -785,13 +766,13 @@ class AnnModelsSpec extends SparkSpec {
     }
     cp("documents"); cp("embeddings")
     AnnModels.withRoot(freshRoot("align")) {
-      val t0 = AnnModels.alignScoreTrains
+      val t0 = AnnModels.builds("align")
       val served = rows(graft.operators.Multimodal.textAlign(spark, dir))
-      assert(AnnModels.alignScoreTrains == t0 + 1, "first access must train")
+      assert(AnnModels.builds("align") == t0 + 1, "first access must train")
       assert(served == rows(graft.operators.Multimodal.textAlignInline(spark, dir)),
         "served alignment scores diverge from inline")
       graft.SparkEntry.queries("pipeline_curate_aligned")(spark, dir).collect()
-      assert(AnnModels.alignScoreTrains == t0 + 1,
+      assert(AnnModels.builds("align") == t0 + 1,
         "the curation consumer must serve the artifact, not retrain")
       // touch ONLY the embeddings table: the documents fingerprint is
       // unchanged, but the artifact depends on both — must retrain
@@ -800,7 +781,7 @@ class AnnModelsSpec extends SparkSpec {
         java.nio.file.attribute.FileTime.fromMillis(
           java.nio.file.Files.getLastModifiedTime(embFile).toMillis + 60000))
       graft.operators.Multimodal.textAlign(spark, dir).collect()
-      assert(AnnModels.alignScoreTrains == t0 + 2,
+      assert(AnnModels.builds("align") == t0 + 2,
         "an embeddings-only edit must invalidate the alignment artifact")
     }
   }
@@ -808,15 +789,15 @@ class AnnModelsSpec extends SparkSpec {
   test("funnel flags: registry-served, bit-identical to inline, ONE build " +
       "across both funnel queries") {
     AnnModels.withRoot(freshRoot("funfl")) {
-      val b0 = AnnModels.funnelFlagBuilds
+      val b0 = AnnModels.builds("funfl")
       graft.operators.Pipeline.funnel(spark, sf).collect()
       graft.operators.Pipeline.funnelSource(spark, sf).collect()
-      assert(AnnModels.funnelFlagBuilds == b0 + 1,
-        s"expected ONE flag build across both funnels, got ${AnnModels.funnelFlagBuilds - b0}")
+      assert(AnnModels.builds("funfl") == b0 + 1,
+        s"expected ONE flag build across both funnels, got ${AnnModels.builds("funfl") - b0}")
       assert(rows(AnnModels.funnelFlags(spark, sf)) ==
         rows(graft.operators.Pipeline.funnelFlagsInline(spark, sf)),
         "served funnel flags diverge from the inline build")
-      assert(AnnModels.funnelFlagBuilds == b0 + 1,
+      assert(AnnModels.builds("funfl") == b0 + 1,
         "re-reading the artifact must not rebuild the flags")
     }
   }
@@ -824,7 +805,7 @@ class AnnModelsSpec extends SparkSpec {
   test("langid + quality score relations: registry-served, bit-identical " +
       "to inline, ONE text scan each across the whole curate battery") {
     AnnModels.withRoot(freshRoot("scores")) {
-      val (l0, q0) = (AnnModels.langidScoreBuilds, AnnModels.qualityScoreBuilds)
+      val (l0, q0) = (AnnModels.builds("lidsc"), AnnModels.builds("qsc"))
       // the heaviest per-invocation consumers: three curate variants +
       // both funnels + the gated scoring queries themselves
       graft.operators.TextOps.langid(spark, sf).collect()
@@ -832,10 +813,10 @@ class AnnModelsSpec extends SparkSpec {
       graft.operators.Pipeline.curate(spark, sf).collect()
       graft.operators.Pipeline.curateNearDup(spark, sf).collect()
       graft.operators.Pipeline.funnel(spark, sf).collect()
-      assert(AnnModels.langidScoreBuilds == l0 + 1,
-        s"expected ONE langid scan, got ${AnnModels.langidScoreBuilds - l0}")
-      assert(AnnModels.qualityScoreBuilds == q0 + 1,
-        s"expected ONE quality scan, got ${AnnModels.qualityScoreBuilds - q0}")
+      assert(AnnModels.builds("lidsc") == l0 + 1,
+        s"expected ONE langid scan, got ${AnnModels.builds("lidsc") - l0}")
+      assert(AnnModels.builds("qsc") == q0 + 1,
+        s"expected ONE quality scan, got ${AnnModels.builds("qsc") - q0}")
       assert(rows(graft.operators.TextOps.langid(spark, sf)) ==
         rows(graft.operators.TextOps.langidInline(spark, sf)),
         "served langid predictions diverge from inline")
@@ -855,8 +836,8 @@ class AnnModelsSpec extends SparkSpec {
       assert(graft.operators.Pipeline.docTokens(spark, sf).count() ==
         graft.sources.Tables.load(spark, sf, "documents").count(),
         "docTokens must cover every document 1:1")
-      assert(AnnModels.langidScoreBuilds == l0 + 1 &&
-        AnnModels.qualityScoreBuilds == q0 + 1,
+      assert(AnnModels.builds("lidsc") == l0 + 1 &&
+        AnnModels.builds("qsc") == q0 + 1,
         "re-reads must not re-scan")
     }
   }
@@ -864,21 +845,21 @@ class AnnModelsSpec extends SparkSpec {
   test("candidate signatures + weighted gram counts: registry-served, " +
       "bit-identical to inline, ONE build each across both verifiers") {
     AnnModels.withRoot(freshRoot("candsig")) {
-      val (s0, g0) = (AnnModels.candSigBuilds, AnnModels.candGramCountBuilds)
+      val (s0, g0) = (AnnModels.builds("mhsig"), AnnModels.builds("mhgc"))
       Dedup.minhashEstimate(spark, sf).collect()
       Dedup.weightedJaccard(spark, sf).collect()
-      assert(AnnModels.candSigBuilds == s0 + 1,
-        s"expected ONE signature build, got ${AnnModels.candSigBuilds - s0}")
-      assert(AnnModels.candGramCountBuilds == g0 + 1,
-        s"expected ONE gram-count build, got ${AnnModels.candGramCountBuilds - g0}")
+      assert(AnnModels.builds("mhsig") == s0 + 1,
+        s"expected ONE signature build, got ${AnnModels.builds("mhsig") - s0}")
+      assert(AnnModels.builds("mhgc") == g0 + 1,
+        s"expected ONE gram-count build, got ${AnnModels.builds("mhgc") - g0}")
       assert(rows(AnnModels.candSigs(spark, sf)) ==
         rows(Dedup.candSigsInline(spark, sf)),
         "served candidate signatures diverge from inline")
       assert(rows(AnnModels.candGramCounts(spark, sf)) ==
         rows(Dedup.candGramCountsInline(spark, sf)),
         "served gram counts diverge from inline")
-      assert(AnnModels.candSigBuilds == s0 + 1 &&
-        AnnModels.candGramCountBuilds == g0 + 1,
+      assert(AnnModels.builds("mhsig") == s0 + 1 &&
+        AnnModels.builds("mhgc") == g0 + 1,
         "re-reads must not rebuild")
     }
   }
@@ -886,15 +867,15 @@ class AnnModelsSpec extends SparkSpec {
   test("calibrated build manifest: registry-served, bit-identical to " +
       "inline, ONE composition across calibrated + ordered builds") {
     AnnModels.withRoot(freshRoot("bldcal")) {
-      val m0 = AnnModels.calibManifestBuilds
+      val m0 = AnnModels.builds("bldcal")
       graft.operators.Pipeline.buildCalibrated(spark, sf).collect()
       graft.operators.Pipeline.buildOrdered(spark, sf).collect()
-      assert(AnnModels.calibManifestBuilds == m0 + 1,
-        s"expected ONE manifest composition, got ${AnnModels.calibManifestBuilds - m0}")
+      assert(AnnModels.builds("bldcal") == m0 + 1,
+        s"expected ONE manifest composition, got ${AnnModels.builds("bldcal") - m0}")
       assert(rows(graft.operators.Pipeline.buildCalibrated(spark, sf)) ==
         rows(graft.operators.Pipeline.buildCalibratedInline(spark, sf)),
         "served manifest diverges from the inline composition")
-      assert(AnnModels.calibManifestBuilds == m0 + 1,
+      assert(AnnModels.builds("bldcal") == m0 + 1,
         "re-reads must not re-compose")
     }
   }
@@ -902,9 +883,9 @@ class AnnModelsSpec extends SparkSpec {
   test("r17 served dedup relations: bit-identical to inline, ONE build " +
       "each across all consumers") {
     AnnModels.withRoot(freshRoot("r17dedup")) {
-      val (s0, d0, b0, e0, n0) = (AnnModels.substrStatBuilds,
-        AnnModels.dupStartBuilds, AnnModels.boilerTopBuilds,
-        AnnModels.embedPairBuilds, AnnModels.bandedPairBuilds)
+      val (s0, d0, b0, e0, n0) = (AnnModels.builds("substat"),
+        AnnModels.builds("dupstart"), AnnModels.builds("boiltop"),
+        AnnModels.builds("embpairs"), AnnModels.builds("mhband"))
       Dedup.substringDup(spark, sf).collect()
       Dedup.substringRemove(spark, sf).collect()
       Dedup.substringSpans(spark, sf).collect()
@@ -912,12 +893,12 @@ class AnnModelsSpec extends SparkSpec {
       Dedup.boilerplateTopK(spark, sf).collect()
       Dedup.embeddingNearDup(spark, sf).collect()
       Dedup.minhashLshBanded(spark, sf).collect()
-      assert(AnnModels.substrStatBuilds == s0 + 1, "ONE substring-stat build")
-      assert(AnnModels.dupStartBuilds == d0 + 1,
-        s"ONE dup-start census across rm/spans/rm_spans, got ${AnnModels.dupStartBuilds - d0}")
-      assert(AnnModels.boilerTopBuilds == b0 + 1, "ONE boilerplate census")
-      assert(AnnModels.embedPairBuilds == e0 + 1, "ONE embedding pair build")
-      assert(AnnModels.bandedPairBuilds == n0 + 1, "ONE banded pair build")
+      assert(AnnModels.builds("substat") == s0 + 1, "ONE substring-stat build")
+      assert(AnnModels.builds("dupstart") == d0 + 1,
+        s"ONE dup-start census across rm/spans/rm_spans, got ${AnnModels.builds("dupstart") - d0}")
+      assert(AnnModels.builds("boiltop") == b0 + 1, "ONE boilerplate census")
+      assert(AnnModels.builds("embpairs") == e0 + 1, "ONE embedding pair build")
+      assert(AnnModels.builds("mhband") == n0 + 1, "ONE banded pair build")
       assert(rows(Dedup.substringDup(spark, sf)) ==
         rows(Dedup.substringDupInline(spark, sf)),
         "served substring stats diverge from inline")
@@ -948,8 +929,8 @@ class AnnModelsSpec extends SparkSpec {
       assert(rows(graft.operators.Pipeline.buildLr(spark, sf)) ==
         rows(graft.operators.Pipeline.buildLrInline(spark, sf)),
         "served lr build manifest diverges from inline")
-      val (p0, t0, g0) = (AnnModels.bpeDocTokenBuilds,
-        AnnModels.trainedDocTokenBuilds, AnnModels.trainedBigDocTokenBuilds)
+      val (p0, t0, g0) = (AnnModels.builds("bdtok"),
+        AnnModels.builds("bdtok-t"), AnnModels.builds("bdtok-tb"))
       assert(rows(graft.operators.Pipeline.packBpe(spark, sf)) ==
         rows(graft.operators.Pipeline.packOf(
           graft.operators.Pipeline.bpeDocTokensInline(spark, sf))),
@@ -965,9 +946,9 @@ class AnnModelsSpec extends SparkSpec {
       graft.operators.Pipeline.packBpe(spark, sf).collect()
       graft.operators.Pipeline.packTrained(spark, sf).collect()
       graft.operators.Pipeline.packTrainedBig(spark, sf).collect()
-      assert(AnnModels.bpeDocTokenBuilds == p0 + 1 &&
-        AnnModels.trainedDocTokenBuilds == t0 + 1 &&
-        AnnModels.trainedBigDocTokenBuilds == g0 + 1,
+      assert(AnnModels.builds("bdtok") == p0 + 1 &&
+        AnnModels.builds("bdtok-t") == t0 + 1 &&
+        AnnModels.builds("bdtok-tb") == g0 + 1,
         "re-reads must not re-count token budgets")
       assert(rows(graft.operators.TextOps.bpeTrainedIds(spark, sf)) ==
         rows(graft.operators.TextOps.bpeTrainedIdsInline(spark, sf)),
@@ -990,10 +971,10 @@ class AnnModelsSpec extends SparkSpec {
   test("r17 batch-3 served curate manifests + source report: bit-identical " +
       "to inline, ONE build each across all consumers") {
     AnnModels.withRoot(freshRoot("r17curate")) {
-      val (c0, m0, n0, se0, al0, so0, st0) = (AnnModels.curateBuilds,
-        AnnModels.curateModelBuilds, AnnModels.curateNearDupBuilds,
-        AnnModels.curateSemanticBuilds, AnnModels.curateAlignedBuilds,
-        AnnModels.curateSourceBuilds, AnnModels.srcStatBuilds)
+      val (c0, m0, n0, se0, al0, so0, st0) = (AnnModels.builds("curheur"),
+        AnnModels.builds("curmod"), AnnModels.builds("curnd"),
+        AnnModels.builds("cursem"), AnnModels.builds("curalg"),
+        AnnModels.builds("cursrc"), AnnModels.builds("srcst"))
       import graft.operators.{Pipeline, TextOps}
       assert(rows(Pipeline.curate(spark, sf)) ==
         rows(Pipeline.curateInline(spark, sf)),
@@ -1021,13 +1002,13 @@ class AnnModelsSpec extends SparkSpec {
       // curate; aligned composes the served semantic)
       Pipeline.curateAligned(spark, sf).collect()
       Pipeline.curateNearDup(spark, sf).collect()
-      assert(AnnModels.curateBuilds == c0 + 1, "ONE curate build")
-      assert(AnnModels.curateModelBuilds == m0 + 1, "ONE model-gate build")
-      assert(AnnModels.curateNearDupBuilds == n0 + 1, "ONE near-dup build")
-      assert(AnnModels.curateSemanticBuilds == se0 + 1, "ONE semantic build")
-      assert(AnnModels.curateAlignedBuilds == al0 + 1, "ONE aligned build")
-      assert(AnnModels.curateSourceBuilds == so0 + 1, "ONE source build")
-      assert(AnnModels.srcStatBuilds == st0 + 1,
+      assert(AnnModels.builds("curheur") == c0 + 1, "ONE curate build")
+      assert(AnnModels.builds("curmod") == m0 + 1, "ONE model-gate build")
+      assert(AnnModels.builds("curnd") == n0 + 1, "ONE near-dup build")
+      assert(AnnModels.builds("cursem") == se0 + 1, "ONE semantic build")
+      assert(AnnModels.builds("curalg") == al0 + 1, "ONE aligned build")
+      assert(AnnModels.builds("cursrc") == so0 + 1, "ONE source build")
+      assert(AnnModels.builds("srcst") == st0 + 1,
         "ONE source-stat build across the report + source-curation reads")
     }
   }
@@ -1035,9 +1016,9 @@ class AnnModelsSpec extends SparkSpec {
   test("r17 batch-3 served tokenizer artifacts + loader orders: " +
       "bit-identical to inline, ONE build each") {
     AnnModels.withRoot(freshRoot("r17tok")) {
-      val (v0, i0, d0, il0, cu0) = (AnnModels.bpeStaticVocabBuilds,
-        AnnModels.bpeStaticIdStreamBuilds, AnnModels.bpeDecodeAuditBuilds,
-        AnnModels.interleaveOrderBuilds, AnnModels.curriculumOrderBuilds)
+      val (v0, i0, d0, il0, cu0) = (AnnModels.builds("bvoc"),
+        AnnModels.builds("bids"), AnnModels.builds("bdec"),
+        AnnModels.builds("ilv"), AnnModels.builds("curric"))
       import graft.operators.{Pipeline, TextOps}
       assert(rows(TextOps.bpeVocab(spark, sf)) ==
         rows(TextOps.bpeVocabInline(spark, sf)),
@@ -1056,23 +1037,23 @@ class AnnModelsSpec extends SparkSpec {
         "served curriculum order diverges from inline")
       TextOps.bpeDecode(spark, sf).collect()
       TextOps.bpeIds(spark, sf).collect()
-      assert(AnnModels.bpeStaticVocabBuilds == v0 + 1,
+      assert(AnnModels.builds("bvoc") == v0 + 1,
         "ONE vocab build across the vocab read + decode-audit build")
-      assert(AnnModels.bpeStaticIdStreamBuilds == i0 + 1, "ONE id-stream build")
-      assert(AnnModels.bpeDecodeAuditBuilds == d0 + 1, "ONE decode-audit build")
-      assert(AnnModels.interleaveOrderBuilds == il0 + 1, "ONE interleave build")
-      assert(AnnModels.curriculumOrderBuilds == cu0 + 1, "ONE curriculum build")
+      assert(AnnModels.builds("bids") == i0 + 1, "ONE id-stream build")
+      assert(AnnModels.builds("bdec") == d0 + 1, "ONE decode-audit build")
+      assert(AnnModels.builds("ilv") == il0 + 1, "ONE interleave build")
+      assert(AnnModels.builds("curric") == cu0 + 1, "ONE curriculum build")
     }
   }
 
   test("knn graph: registry-served, bit-identical to inline, ONE build " +
       "per corpus state") {
     AnnModels.withRoot(freshRoot("knng")) {
-      val b0 = AnnModels.knnGraphBuilds
+      val b0 = AnnModels.builds("knng")
       val served = rows(Similarity.knnGraph(spark, sf))
-      assert(AnnModels.knnGraphBuilds == b0 + 1, "first access must build")
+      assert(AnnModels.builds("knng") == b0 + 1, "first access must build")
       assert(rows(Similarity.knnGraph(spark, sf)) == served)
-      assert(AnnModels.knnGraphBuilds == b0 + 1,
+      assert(AnnModels.builds("knng") == b0 + 1,
         "second access must serve the artifact, not rebuild")
       assert(served == rows(Similarity.knnGraphInline(spark, sf)),
         "served knn graph diverges from the inline build")
@@ -1082,16 +1063,16 @@ class AnnModelsSpec extends SparkSpec {
   test("production-budget unigram vocabulary: own key, ONE train, " +
       "coexists with the toy budget") {
     AnnModels.withRoot(freshRoot("unibig")) {
-      val (t0, b0) = (AnnModels.uniTrains, AnnModels.uniBigTrains)
+      val (t0, b0) = (AnnModels.builds("uni"), AnnModels.builds("unibig"))
       val big = rows(graft.operators.UnigramLm.unigramVocabBig(spark, sf))
-      assert(AnnModels.uniBigTrains == b0 + 1, "first access must train")
+      assert(AnnModels.builds("unibig") == b0 + 1, "first access must train")
       graft.operators.UnigramLm.unigramIdsBig(spark, sf).count()
-      assert(AnnModels.uniBigTrains == b0 + 1,
+      assert(AnnModels.builds("unibig") == b0 + 1,
         "the id consumer must serve the artifact, not retrain")
       // the toy-budget artifact is a DIFFERENT key: reading it trains the
       // small model without touching the big one
       graft.operators.UnigramLm.unigramVocab(spark, sf).count()
-      assert(AnnModels.uniTrains == t0 + 1 && AnnModels.uniBigTrains == b0 + 1,
+      assert(AnnModels.builds("uni") == t0 + 1 && AnnModels.builds("unibig") == b0 + 1,
         "the two budgets must live under distinct keys")
       assert(big == rows(graft.operators.UnigramLm.uniTrainOf(
           graft.sources.Tables.load(spark, sf, "documents"),
@@ -1124,23 +1105,24 @@ class AnnModelsSpec extends SparkSpec {
       "an in-place corpus edit crossing a sizing boundary must re-derive K")
   }
 
-  test("sweep spares key-shaped dirs without old-layout evidence") {
-    val root = freshRoot("sweep2")
-    // the two shapes the absence-only predicate would have destroyed
-    // (ADVICE r12): a second writer mid-FIRST-train — key dir created,
-    // first g-* generation not yet written — and a foreign directory
-    // that happens to match the key pattern in a shared model dir
-    val midTrain = new java.io.File(root, "lm-feedfacefeedface")
-    assert(midTrain.mkdirs())
-    val foreign = new java.io.File(root, "backup-0123456789ab")
-    assert(foreign.mkdirs())
-    java.nio.file.Files.write(new java.io.File(foreign, "data.bin").toPath,
-      "not ours".getBytes("UTF-8"))
+  test("a marker holding only the fingerprint line retrains instead of serving") {
+    val root = freshRoot("fponly")
     AnnModels.withRoot(root) {
-      AnnModels.ivfCentroids(spark, sf).collect()
-      assert(midTrain.exists(),
-        "a marker-less, generation-less, _SUCCESS-less key dir must survive the sweep")
-      assert(foreign.exists(), "foreign key-shaped dirs without old-layout markers must survive")
+      val t0 = AnnModels.builds("ivf")
+      val first = rows(AnnModels.ivfCentroids(spark, sf))
+      assert(AnnModels.builds("ivf") == t0 + 1)
+      val key = new java.io.File(root).listFiles().find(_.getName.startsWith("ivf-")).get
+      val marker = new java.io.File(key, "_GRAFT_COMPLETE")
+      val fp = new String(java.nio.file.Files.readAllBytes(marker.toPath), "UTF-8")
+        .split("\n")(0)
+      // the generation the fingerprint hashes to still exists on disk, but a
+      // marker without a generation line must not name it
+      java.nio.file.Files.write(marker.toPath, fp.getBytes("UTF-8"))
+      new java.io.File(key, "._GRAFT_COMPLETE.crc").delete()
+      val again = AnnModels.ivfCentroids(spark, sf)
+      assert(AnnModels.builds("ivf") == t0 + 2,
+        "a fingerprint-only marker must retrain, not serve")
+      assert(rows(again) == first)
     }
   }
 
@@ -1175,11 +1157,11 @@ class AnnModelsSpec extends SparkSpec {
 
   test("non-default training parameters bypass the artifact store") {
     AnnModels.withRoot(freshRoot("bypass")) {
-      val t0 = AnnModels.ivfTrains
+      val t0 = AnnModels.builds("ivf")
       // iters=0 (the untrained-init recall baseline) must not read or
       // write the default-keyed artifact
       Similarity.annIvfIters(spark, sf, 0).collect()
-      assert(AnnModels.ivfTrains == t0, "non-default variant touched the registry")
+      assert(AnnModels.builds("ivf") == t0, "non-default variant touched the registry")
     }
   }
 
@@ -1188,9 +1170,9 @@ class AnnModelsSpec extends SparkSpec {
   test("minhash candidate pairs build once; served pairs are bit-identical " +
       "to the inline LSH chain and feed the CC labeling without a rebuild") {
     AnnModels.withRoot(freshRoot("mhcand")) {
-      val (c0, l0) = (AnnModels.candPairBuilds, AnnModels.candLabelBuilds)
+      val (c0, l0) = (AnnModels.builds("mhcand"), AnnModels.builds("ccraw"))
       val served = rows(Dedup.minhashLsh(spark, sf))
-      assert(AnnModels.candPairBuilds == c0 + 1, "first access must build")
+      assert(AnnModels.builds("mhcand") == c0 + 1, "first access must build")
       assert(served == rows(Dedup.minhashLshInline(spark, sf)),
         "artifact-served candidate pairs diverged from the inline LSH chain")
       assert(served.nonEmpty, "construction check: the corpus has candidates")
@@ -1198,12 +1180,12 @@ class AnnModelsSpec extends SparkSpec {
       Dedup.weightedJaccard(spark, sf).collect()
       Dedup.minhashEstimate(spark, sf).collect()
       val labels = rows(Dedup.clusterAssign(spark, sf))
-      assert(AnnModels.candPairBuilds == c0 + 1,
-        s"expected ONE candidate build across consumers, got ${AnnModels.candPairBuilds - c0}")
-      assert(AnnModels.candLabelBuilds == l0 + 1, "labels must build once")
+      assert(AnnModels.builds("mhcand") == c0 + 1,
+        s"expected ONE candidate build across consumers, got ${AnnModels.builds("mhcand") - c0}")
+      assert(AnnModels.builds("ccraw") == l0 + 1, "labels must build once")
       assert(labels == rows(Dedup.clusterAssignInline(spark, sf)),
         "artifact-served CC labeling diverged from the inline star loop")
-      assert(AnnModels.candLabelBuilds == l0 + 1,
+      assert(AnnModels.builds("ccraw") == l0 + 1,
         "the inline parity run must not write the registry")
     }
   }
@@ -1213,8 +1195,8 @@ class AnnModelsSpec extends SparkSpec {
     AnnModels.withRoot(freshRoot("curation")) {
       val T = graft.operators.TextOps
       val P = graft.operators.Pipeline
-      val (g0, d0, k0) = (AnnModels.gopherFlagBuilds, AnnModels.dirtyGramBuilds,
-        AnnModels.calibKeepBuilds)
+      val (g0, d0, k0) = (AnnModels.builds("gflags"), AnnModels.builds("dirty"),
+        AnnModels.builds("calib"))
       assert(rows(T.gopherRules(spark, sf)) == rows(T.gopherRulesInline(spark, sf)),
         "artifact-served gopher flags diverged from the inline battery")
       assert(rows(P.decontaminate(spark, sf)) == rows(P.decontaminateInline(spark, sf)),
@@ -1225,12 +1207,12 @@ class AnnModelsSpec extends SparkSpec {
       // the build capstone reads all three — no rebuild on a second pass
       P.build(spark, sf).collect()
       P.buildCalibrated(spark, sf).collect()
-      assert(AnnModels.gopherFlagBuilds == g0 + 1,
-        s"expected ONE gopher build, got ${AnnModels.gopherFlagBuilds - g0}")
-      assert(AnnModels.dirtyGramBuilds == d0 + 1,
-        s"expected ONE contamination build, got ${AnnModels.dirtyGramBuilds - d0}")
-      assert(AnnModels.calibKeepBuilds == k0 + 1,
-        s"expected ONE calibrated build, got ${AnnModels.calibKeepBuilds - k0}")
+      assert(AnnModels.builds("gflags") == g0 + 1,
+        s"expected ONE gopher build, got ${AnnModels.builds("gflags") - g0}")
+      assert(AnnModels.builds("dirty") == d0 + 1,
+        s"expected ONE contamination build, got ${AnnModels.builds("dirty") - d0}")
+      assert(AnnModels.builds("calib") == k0 + 1,
+        s"expected ONE calibrated build, got ${AnnModels.builds("calib") - k0}")
     }
   }
 }

@@ -6,6 +6,16 @@ import org.scalatest.funsuite.AnyFunSuite
   * overwrites clean evidence. */
 class BenchSpec extends AnyFunSuite {
 
+  test("a query that throws in any sample is failed, never timed") {
+    val (timed, failed) = Bench.classify(Seq(
+      "ok" -> Seq(Some(1.0), Some(0.5), Some(0.6)),
+      "cold_throw" -> Seq(None, Some(0.5), Some(0.6)),
+      "warm_throw" -> Seq(Some(1.0), Some(0.5), None)))
+    assert(timed == Seq("ok" -> Seq(1.0, 0.5, 0.6)))
+    assert(failed == Seq("cold_throw", "warm_throw"))
+    assert(Bench.classify(Seq.empty) == ((Seq.empty, Seq.empty)))
+  }
+
   test("clean run always writes the primary artifact") {
     assert(Bench.artifactDestination("b.json", 0.9, fileExists = false, None) == "b.json")
     assert(Bench.artifactDestination("b.json", 0.9, fileExists = true, Some(0.5)) == "b.json")
